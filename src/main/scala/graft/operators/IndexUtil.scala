@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{bit_xor, col, count, lit, pmod, sum}
 
 /** Shared plumbing for the PERSISTED-INDEX lifecycle (build-once
   * bucketed tables searched by later queries — the ANN family's
@@ -78,15 +78,25 @@ private[graft] object IndexUtil {
     * elides the repartition as satisfied by the nominal scan
     * partitioning, then the demotion un-satisfies it — measured,
     * 13 mixed-bucket files from 4 size-split tasks).
-    * The result is FINGERPRINT-VERIFIED against the source
-    * table BEFORE the swap ([[MetadataOps.fnvFingerprints]], 64
-    * buckets — compaction must be invisible to every query), then the
-    * fragmented table drops: the generation-swap commit discipline.
+    * The result is FINGERPRINT-VERIFIED BEFORE the swap — compaction
+    * must be invisible to every query. The write job itself observes
+    * the source rows' (count, bit_xor, Σ mod 2^40) of
+    * [[MetadataOps.fnvRowFingerprint]] (an `Observation` on the
+    * written frame, so the source is read once), and only the
+    * compacted generation is read back for the same triple. On a
+    * mismatch the 64-bucket full-outer diagnosis
+    * ([[MetadataOps.fnvFingerprints]] of both sides) counts the bad
+    * buckets for the failure message; the fragmented table stays
+    * live. On a match the fragmented table drops: the generation-swap
+    * commit discipline. `rewrite` is a fault-injection seam for
+    * specs: it sees the rows after the source is observed and before
+    * they are written (identity in every real caller).
     * At 100 TB compaction runs partition-scoped and incremental —
     * only partitions whose generation count crossed a threshold
     * rewrite (the Delta OPTIMIZE / LSM-compaction posture). */
   def compactTable(s: SparkSession, frag: String, compacted: String,
-      buckets: Int, bucketCols: Seq[String], sortCols: Seq[String]): Unit = {
+      buckets: Int, bucketCols: Seq[String], sortCols: Seq[String],
+      rewrite: DataFrame => DataFrame = identity): Unit = {
     // drop the TARGET first, catalog AND disk (the writeMergeGeneration
     // discipline): a previous JVM's run may have left the location
     // behind with no in-memory catalog entry, and saveAsTable fails on
@@ -95,8 +105,11 @@ private[graft] object IndexUtil {
     val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val prevAuto = s.conf.getOption(autoKey)
     s.conf.set(autoKey, "false")
+    val source = s.table(frag)
+    val totals = fingerprintTotals(source)
+    val obs = Observation()
     try {
-      s.table(frag)
+      rewrite(source.observe(obs, totals.head, totals.tail: _*))
         .write.mode("overwrite")
         .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
         .sortBy(sortCols.head, sortCols.tail: _*)
@@ -105,18 +118,46 @@ private[graft] object IndexUtil {
       case Some(v) => s.conf.set(autoKey, v)
       case None => s.conf.unset(autoKey)
     }
-    val bad = MetadataOps.fnvFingerprints(s.table(frag), "src")
-      .join(MetadataOps.fnvFingerprints(s.table(compacted), "dst"),
-        Seq("bucket"), "full_outer")
-      .filter(!(col("src_rows") <=> col("dst_rows") &&
-        col("src_xor") <=> col("dst_xor") &&
-        col("src_sum") <=> col("dst_sum")))
-      .count()
-    if (bad > 0) throw new IllegalStateException(
-      s"compacted generation $compacted failed fingerprint " +
-        s"verification in $bad/64 buckets — not swapped in")
+    val written = observed(obs, compacted)
+    val target = s.table(compacted)
+    if (target.select(fingerprintTotals(target): _*).head().toSeq != written.toSeq) {
+      val bad = MetadataOps.fnvFingerprints(source, "src")
+        .join(MetadataOps.fnvFingerprints(target, "dst"), Seq("bucket"), "full_outer")
+        .filter(!(col("src_rows") <=> col("dst_rows") &&
+          col("src_xor") <=> col("dst_xor") &&
+          col("src_sum") <=> col("dst_sum")))
+        .count()
+      throw new IllegalStateException(
+        s"compacted generation $compacted failed fingerprint " +
+          s"verification in $bad/64 buckets — not swapped in")
+    }
     dropIndexTable(s, frag) // commit point: compacted is live
   }
+
+  /** Whole-table (rows, bit_xor, Σ mod 2^40) of the FNV row
+    * fingerprint — [[MetadataOps.fnvFingerprints]]' per-bucket triple
+    * folded over all buckets. The sum runs in decimal so it cannot
+    * overflow at any row count. */
+  private def fingerprintTotals(df: DataFrame): Seq[Column] = {
+    val fp = MetadataOps.fnvRowFingerprint(df)
+    Seq(count(lit(1)).as("rows"), bit_xor(fp).as("xor"),
+      sum(pmod(fp, lit(1L << 40)).cast("decimal(38,0)")).as("sum"))
+  }
+
+  /** Longest wait for an `Observation` once its action has returned.
+    * Spark fills observations from its listener bus, so they land
+    * asynchronously but normally within milliseconds. */
+  private val ObservationWait = scala.concurrent.duration.Duration(60, "s")
+
+  /** The metrics an index write observed. The one place that reads an
+    * `Observation`: waits at most [[ObservationWait]] and then fails
+    * naming `tbl`, never blocks without a bound. */
+  def observed(obs: Observation, tbl: String): Row =
+    try scala.concurrent.Await.result(obs.future, ObservationWait)
+    catch { case _: java.util.concurrent.TimeoutException =>
+      throw new IllegalStateException(
+        s"observed metrics of the write to $tbl did not arrive within $ObservationWait")
+    }
 
   /** Number of parquet data files backing a saved table — the
     * quantity compaction exists to shrink; exposed for specs. */

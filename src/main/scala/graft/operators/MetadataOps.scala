@@ -584,7 +584,13 @@ object MetadataOps {
     * signed residue coincides). NULL-free inputs only: concat_ws
     * silently drops nulls, which would alias (1,NULL,2)/(1,2,NULL). */
   def fnvFingerprints(df: DataFrame, side: String,
-                      buckets: Int = 64): DataFrame = {
+                      buckets: Int = 64): DataFrame =
+    bucketedFingerprints(df, fnvRowFingerprint(df), side, buckets)
+
+  /** The per-row FNV-1a fingerprint that [[fnvFingerprints]] buckets,
+    * as a column over `df`'s own columns (referenced by name, so it
+    * also evaluates inside an `observe` on `df`). */
+  def fnvRowFingerprint(df: DataFrame): org.apache.spark.sql.Column = {
     import graft.functions.{Fnv64StringExpr, GraftExpressions}
     // Per-type canonical rendering - each case has an exact DuckDB
     // mirror, which is the whole point of this fingerprint family:
@@ -609,9 +615,7 @@ object MetadataOps {
           case _ => col(c).cast("string")
         }
       }.toIndexedSeq: _*)
-    val rowFp = GraftExpressions.toColumn(
-      Fnv64StringExpr(GraftExpressions.toExpr(canon)))
-    bucketedFingerprints(df, rowFp, side, buckets)
+    GraftExpressions.toColumn(Fnv64StringExpr(GraftExpressions.toExpr(canon)))
   }
 
   private def bucketedFingerprints(df: DataFrame, rowFp: org.apache.spark.sql.Column,

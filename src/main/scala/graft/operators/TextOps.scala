@@ -1851,7 +1851,10 @@ object TextOps {
     * streaming twin refreshes standing queries per micro-batch with N
     * = documents indexed SO FAR (idf re-derives from the merged index
     * at every refresh; N arrives from the caller's running count, not
-    * a table scan). */
+    * a table scan). N rides as a column of the query-term relation,
+    * not as a literal in the weight expression, so the generated code
+    * does not depend on it: a refresh with a new N reuses the classes
+    * Spark compiled for the previous one (spec-gated). */
   private[graft] def searchIndexQueryOver(s: SparkSession, tbl: String,
       n: Long): DataFrame = {
     import s.implicits._
@@ -1859,11 +1862,13 @@ object TextOps {
     val qTerms = Seq(
       (0L, "spark"), (0L, "join"),
       (1L, "window"), (1L, "stream"), (1L, "sort"),
-      (2L, "customer"), (2L, "merge")).toDF("query_id", "term")
+      (2L, "customer"), (2L, "merge")).map { case (q, t) => (q, t, n) }
+      .toDF("query_id", "term", "n")
     val dfreq = idx.groupBy($"term").agg(count(lit(1)).as("df"))
     val weights = qTerms.join(dfreq, "term")
       .withColumn("w_ppm", least(lit(1000000000000L),
-        expr(s"(${n}L div df) * 1000000 + ((${n}L % df) * 1000000) div df")))
+        expr("(n div df) * 1000000 + ((n % df) * 1000000) div df")))
+      .drop("n")
     val scored = idx.join(broadcast(weights), "term")
       .groupBy($"query_id", $"doc_id")
       .agg(sum(expr("tf * w_ppm")).as("score_ppm"),

@@ -1192,23 +1192,36 @@ object StreamingOps extends Serializable {
     val indexedN = new java.util.concurrent.atomic.AtomicLong(baseN)
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist()
-        try {
-          guard(batchId) {
-            graft.operators.TextOps.appendPostings(b, idxTbl)
-            indexedN.addAndGet(b.count())
-          }
-          val res = graft.operators.TextOps
-            .searchIndexQueryOver(s, idxTbl, indexedN.get()).persist()
-          try {
-            // pin before delivery — the standard foreachBatch dataset
-            // contract: valid during the onBatch call only
-            res.count()
-            onBatch(res)
-          } finally res.unpersist(blocking = false)
-        } finally b.unpersist(blocking = false)
+        postingsBatch(batch, batchId, guard, indexedN, () => idxTbl, onBatch)(())
     }.start()
+  }
+
+  /** One postings micro-batch, the body both postings streams share:
+    *
+    *   1. the guarded APPEND of the batch's postings into `live()`.
+    *      The batch's document count is an `Observation` on the append
+    *      job itself, so the batch is neither cached nor counted by a
+    *      second job; a batch the guard skips as a replay creates and
+    *      reads no observation and leaves `indexedN` as it was;
+    *   2. `maintain` (compaction, for the compacting stream);
+    *   3. ONE refresh of the standing queries from `live()`, collected
+    *      (top 10 per query — at most 30 rows) and handed to `onBatch`
+    *      as a local DataFrame, which stays valid after the call and
+    *      costs no cache block and no further job to read. */
+  private[graft] def postingsBatch(batch: DataFrame, batchId: Long,
+      guard: AppendGuard, indexedN: java.util.concurrent.atomic.AtomicLong,
+      live: () => String, onBatch: DataFrame => Unit)(maintain: => Unit): Unit = {
+    import graft.operators.{IndexUtil, TextOps}
+    val s = batch.sparkSession
+    guard(batchId) {
+      val tbl = live()
+      val obs = org.apache.spark.sql.Observation()
+      TextOps.appendPostings(batch.observe(obs, count(lit(1)).as("docs")), tbl)
+      indexedN.addAndGet(IndexUtil.observed(obs, tbl).getLong(0))
+    }
+    maintain
+    val res = TextOps.searchIndexQueryOver(s, live(), indexedN.get())
+    onBatch(s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema))
   }
 
   /** CONTINUOUS INGEST WITH PERIODIC COMPACTION — the LSM posture on
@@ -1223,18 +1236,22 @@ object StreamingOps extends Serializable {
     *   1. APPENDS its postings to the chain's CURRENT generation
     *      (`<base>_g<n>` — the tableMergeStream naming; durable
     *      per-batchId replay guard, the append is the non-idempotent
-    *      leg);
+    *      leg; the batch's document count is observed in the append
+    *      job — see [[postingsBatch]]);
     *   2. every `every` batches, COMPACTS the current generation
     *      forward: the zero-shuffle bucketed fold of compactTable,
-    *      fingerprint-verified BEFORE the swap, then `n` advances and
-    *      the fragmented predecessor drops (generation-swap commit
+    *      fingerprint-verified BEFORE the swap (the source side is
+    *      observed inside the fold's own write job, so only the new
+    *      generation is read back), then `n` advances and the
+    *      fragmented predecessor drops (generation-swap commit
     *      discipline). The compact leg's guard is in-process only
     *      (`idempotent = true` — the dedupIndexStream carve-out):
     *      compaction is content-idempotent, so on any replay the
     *      always-correct answer is to re-run it, at worst burning one
     *      extra fold;
     *   3. re-serves the standing queries from the post-maintenance
-    *      generation (append-then-refresh, the searchIndexStream
+    *      generation, collected once and delivered as a local
+    *      DataFrame (append-then-refresh, the searchIndexStream
     *      order — a refresh must reflect the batch that landed, and
     *      must be INVISIBLE to maintenance: compaction holds contents
     *      fixed, so a refresh before or after the fold reads the same
@@ -1276,27 +1293,16 @@ object StreamingOps extends Serializable {
     val indexedN = new java.util.concurrent.atomic.AtomicLong(baseN)
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist()
-        try {
-          appendGuard(batchId) {
-            graft.operators.TextOps.appendPostings(b, s"${idxBase}_g${curGen.get()}")
-            indexedN.addAndGet(b.count())
-          }
+        postingsBatch(batch, batchId, appendGuard, indexedN,
+            () => s"${idxBase}_g${curGen.get()}", onBatch) {
           if ((batchId + 1) % every == 0) compactGuard(batchId, "compact") {
             val gen = curGen.get()
-            graft.operators.IndexUtil.compactTable(s,
+            graft.operators.IndexUtil.compactTable(batch.sparkSession,
               s"${idxBase}_g$gen", s"${idxBase}_g${gen + 1}",
               buckets = 8, bucketCols = Seq("term"), sortCols = Seq("term"))
             curGen.set(gen + 1) // commit point: compactTable verified+swapped
           }
-          val res = graft.operators.TextOps.searchIndexQueryOver(s,
-            s"${idxBase}_g${curGen.get()}", indexedN.get()).persist()
-          try {
-            res.count()
-            onBatch(res)
-          } finally res.unpersist(blocking = false)
-        } finally b.unpersist(blocking = false)
+        }
     }.start()
   }
 

@@ -1458,6 +1458,34 @@ class StreamingSpec extends SparkSpec {
     assert(appends == 5, "stale marker blocked a rebuilt table's fresh stream")
   }
 
+  test("postings batch: a replay the AppendGuard skips reads no observation and leaves the running N unchanged") {
+    import spark.implicits._
+    import graft.operators.TextOps
+    def hits(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
+    val (tbl, baseN) = TextOps.searchStreamIndexTable(spark, sf0001, "rp")
+    val batch = Tables.documents(spark, sf0001).filter($"doc_id" % 10 === 0)
+      .select($"doc_id", $"text").limit(3)
+    val indexedN = new java.util.concurrent.atomic.AtomicLong(baseN)
+    val guard = new StreamingOps.AppendGuard(spark, tbl)
+    var refreshes = Seq.empty[Seq[(Long, Int, Long, Long)]]
+    StreamingOps.postingsBatch(batch, 0L, guard, indexedN, () => tbl,
+      df => refreshes :+= hits(df))(())
+    assert(indexedN.get() == baseN + 3, s"first delivery counted ${indexedN.get() - baseN} docs")
+    val rows = spark.table(tbl).count()
+    // the replay's batch fails if it is ever executed: only the append
+    // runs it, and an observation read without its append would time
+    // out and throw
+    val poisoned = spark.range(1).select(lit(0L).as("doc_id"),
+      raise_error(lit("replayed batch was executed")).cast("string").as("text"))
+    StreamingOps.postingsBatch(poisoned, 0L, new StreamingOps.AppendGuard(spark, tbl),
+      indexedN, () => tbl, df => refreshes :+= hits(df))(())
+    assert(indexedN.get() == baseN + 3, "a skipped replay moved the running N")
+    assert(spark.table(tbl).count() == rows, "a skipped replay appended postings")
+    assert(refreshes.size == 2 && refreshes(1) == refreshes(0),
+      "the replay's refresh differs from the committed batch's")
+  }
+
   test("streaming IVF ingest: per-batch refresh over the growing lists converges to the one-shot frozen-centroid build") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

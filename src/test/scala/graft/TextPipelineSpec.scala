@@ -889,6 +889,79 @@ class TextPipelineSpec extends SparkSpec {
       "Exchange between the df aggregate and the compacted bucketed scan")
   }
 
+  test("compactTable's fingerprint gate refuses a lost, duplicated or changed posting and keeps the fragmented generation") {
+    import graft.operators.IndexUtil
+    val (frag, _) = TextOps.searchStreamIndexTable(spark, sf0001, "gate")
+    TextOps.appendPostings(Tables.documents(spark, sf0001)
+      .filter($"doc_id" % 10 === 0).select($"doc_id", $"text"), frag)
+    val rows = spark.table(frag).count()
+    val victim = spark.table(frag).orderBy($"term", $"doc_id").head()
+    val (term, doc) = (victim.getAs[String]("term"), victim.getAs[Long]("doc_id"))
+    val isVictim = $"term" === term && $"doc_id" === doc
+    val faults = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "lost row" -> (_.filter(!isVictim)),
+      "duplicated row" -> (df => df.unionByName(
+        Seq((term, doc, victim.getAs[Long]("tf"))).toDF("term", "doc_id", "tf"))),
+      "changed tf" -> (_.withColumn("tf", when(isVictim, $"tf" + 1).otherwise($"tf"))))
+    val msg = """compacted generation (\S+) failed fingerprint verification in (\d+)/64 buckets — not swapped in""".r
+    for ((fault, rewrite) <- faults) {
+      val compacted = s"${frag}_c"
+      val e = intercept[IllegalStateException] {
+        IndexUtil.compactTable(spark, frag, compacted,
+          buckets = 8, bucketCols = Seq("term"), sortCols = Seq("term"), rewrite = rewrite)
+      }
+      e.getMessage match {
+        case msg(tbl, bad) =>
+          assert(tbl == compacted && bad.toInt >= 1, s"$fault: ${e.getMessage}")
+        case other => fail(s"$fault: unexpected failure message: $other")
+      }
+      assert(spark.catalog.tableExists(frag) && spark.table(frag).count() == rows,
+        s"$fault: the fragmented generation did not survive the refused swap")
+    }
+    IndexUtil.dropIndexTable(spark, frag)
+    IndexUtil.dropIndexTable(spark, s"${frag}_c")
+  }
+
+  test("searchIndexQueryOver: a refresh with a new N compiles no code and matches the N-literal form") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (tbl, baseN) = TextOps.searchStreamIndexTable(spark, sf0001, "cg")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    // the weight expression with N pasted in as a literal — the form the
+    // column-carried N replaced, kept here as the reference
+    def literalForm(n: Long) = {
+      val idx = spark.table(tbl)
+      val qTerms = Seq((0L, "spark"), (0L, "join"), (1L, "window"), (1L, "stream"),
+        (1L, "sort"), (2L, "customer"), (2L, "merge")).toDF("query_id", "term")
+      val weights = qTerms.join(idx.groupBy($"term").agg(count(lit(1)).as("df")), "term")
+        .withColumn("w_ppm", least(lit(1000000000000L),
+          expr(s"(${n}L div df) * 1000000 + ((${n}L % df) * 1000000) div df")))
+      idx.join(broadcast(weights), "term")
+        .groupBy($"query_id", $"doc_id")
+        .agg(sum(expr("tf * w_ppm")).as("score_ppm"), count(lit(1)).as("terms_hit"))
+        .withColumn("rank", row_number().over(
+          Window.partitionBy($"query_id").orderBy($"score_ppm".desc, $"doc_id")))
+        .filter($"rank" <= 10)
+        .select($"query_id", $"rank", $"doc_id", $"score_ppm", $"terms_hit")
+        .orderBy($"query_id", $"rank")
+    }
+    def withCompiles[T](body: => T): (T, Long) = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val out = body
+      (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    }
+    val n1 = baseN + 1000003L
+    val n2 = baseN + 2000029L
+    val first = rows(TextOps.searchIndexQueryOver(spark, tbl, n1))
+    val (second, recompiled) = withCompiles(rows(TextOps.searchIndexQueryOver(spark, tbl, n2)))
+    assert(recompiled == 0, s"a refresh with a new N compiled $recompiled classes")
+    assert(first.nonEmpty && first == rows(literalForm(n1)) && second == rows(literalForm(n2)),
+      "the column-carried N changed the search results")
+    // control: the measurement sees the literal form's per-N code
+    val (_, literalRecompiled) = withCompiles(rows(literalForm(n2 + 1)))
+    assert(literalRecompiled > 0, "the compile counter missed the N-literal form's recompiles")
+    graft.operators.IndexUtil.dropIndexTable(spark, tbl)
+  }
+
   test("text_multi_route: one pass materializes disjoint curated/rejected plus an overlapping audit copy") {
     import spark.implicits._
     // run the registered query (builds the partitioned layout once)
