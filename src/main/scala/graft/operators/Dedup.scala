@@ -505,10 +505,8 @@ object Dedup {
     *     its re-crawled text (the exact [[writeMhIndex]] expressions);
     *   - each table's result is written as the NEXT GENERATION of its
     *     own bucketed layout ((band, bkey) for the band table, doc_id
-    *     for the signatures), FINGERPRINT-VERIFIED against the
-    *     logical merge ([[MetadataOps.fnvFingerprints]], 64 buckets)
-    *     BEFORE the swap — the tableMergeStream commit discipline,
-    *     applied per table.
+    *     for the signatures) through [[IndexUtil
+    *     .writeVerifiedGeneration]]; both verify before either swaps.
     *
     * Scale: copy-on-write, one bucketed rewrite per table with a
     * delta-sized Exchange. The same key asymmetry as the postings
@@ -545,34 +543,15 @@ object Dedup {
       val reSigs = docs.filter($"doc_id" % 10 === 7)
         .select($"doc_id", minhashSignature(shingleHashes($"text", 3), 32).as("sig"))
       val touched = reSigs.select($"doc_id").distinct()
-      def mergeBand(tgt: DataFrame): DataFrame =
-        tgt.join(touched, Seq("doc_id"), "left_anti")
-          .unionByName(reSigs
-            .select($"doc_id", explode(bandKeys($"sig", 8, 4)).as("bk"))
-            .select($"doc_id", $"bk.band".as("band"), $"bk.bkey".as("bkey")))
-      def mergeSig(tgt: DataFrame): DataFrame =
-        tgt.join(touched, Seq("doc_id"), "left_anti").unionByName(reSigs)
-      mergeBand(s.table(baseB)).write.mode("overwrite")
-        .bucketBy(8, "band", "bkey").sortBy("band", "bkey")
-        .format("parquet").saveAsTable(mergB)
-      mergeSig(s.table(baseS)).write.mode("overwrite")
-        .bucketBy(8, "doc_id").sortBy("doc_id")
-        .format("parquet").saveAsTable(mergS)
-      // verify each generation BEFORE its swap: logical merge vs
-      // read-back, 64 fingerprint buckets — the tableMergeStream gate
-      def verify(logical: DataFrame, tbl: String): Unit = {
-        val bad = MetadataOps.fnvFingerprints(logical, "src")
-          .join(MetadataOps.fnvFingerprints(s.table(tbl), "dst"),
-            Seq("bucket"), "full_outer")
-          .filter(!($"src_rows" <=> $"dst_rows" && $"src_xor" <=> $"dst_xor" &&
-            $"src_sum" <=> $"dst_sum"))
-          .count()
-        if (bad > 0) throw new IllegalStateException(
-          s"band-index merge generation $tbl failed fingerprint " +
-            s"verification in $bad/64 buckets — not swapped in")
-      }
-      verify(mergeBand(s.table(baseB)), mergB)
-      verify(mergeSig(s.table(baseS)), mergS)
+      val mergedBand = s.table(baseB).join(touched, Seq("doc_id"), "left_anti")
+        .unionByName(reSigs
+          .select($"doc_id", explode(bandKeys($"sig", 8, 4)).as("bk"))
+          .select($"doc_id", $"bk.band".as("band"), $"bk.bkey".as("bkey")))
+      IndexUtil.writeVerifiedGeneration(mergedBand, mergB, 8, Seq("band", "bkey"),
+        Seq("band", "bkey"), "band-index merge")
+      IndexUtil.writeVerifiedGeneration(
+        s.table(baseS).join(touched, Seq("doc_id"), "left_anti").unionByName(reSigs),
+        mergS, 8, Seq("doc_id"), Seq("doc_id"), "signature-index merge")
       // commit point: both generations verified, the stale pair drops
       IndexUtil.dropIndexTable(s, baseB)
       IndexUtil.dropIndexTable(s, baseS)

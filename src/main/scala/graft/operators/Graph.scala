@@ -1068,12 +1068,9 @@ object Graph {
     *     (the Update leg — existing rows change value; the Insert leg
     *     — the delta's new rows join the group);
     *   - the result is written as the NEXT GENERATION of the same
-    *     src-bucketed layout, FINGERPRINT-VERIFIED against a logical
-    *     recomputation ([[MetadataOps.fnvFingerprints]], 64 buckets —
-    *     a row lost, duplicated, or corrupted in the write fails the
-    *     build before the swap), and only then swapped in (drop old
-    *     generation) — [[graft.streaming.StreamingOps
-    *     .tableMergeStream]]'s commit discipline on the graph tier.
+    *     src-bucketed layout through [[IndexUtil
+    *     .writeVerifiedGeneration]], and only then swapped in (drop old
+    *     generation).
     *
     * Scale: copy-on-write — the generation rewrite scans the table
     * once (bucketed write, delta-sized Exchange only: the touched
@@ -1101,16 +1098,15 @@ object Graph {
           .write.mode("overwrite").bucketBy(32, "src").sortBy("src")
           .format("parquet").saveAsTable(base)
         val delta = edges.filter(pmod($"dst", lit(3L)) === 0)
-        def mergeOf(tgt: DataFrame): DataFrame = {
-          val touched = delta.select($"src").distinct()
-          val carryOver = tgt.join(touched, Seq("src"), "left_anti")
-          val grp = tgt.join(touched, Seq("src"), "left_semi")
-            .select($"src", $"dst", $"w")
-            .unionByName(delta.select($"src", $"dst", $"w"))
-          carryOver.unionByName(
-            grp.join(grp.groupBy($"src").agg(sum($"w").as("out_w")), "src")
-              .select($"src", $"dst", $"w", $"out_w"))
-        }
+        val tgt = s.table(base)
+        val touched = delta.select($"src").distinct()
+        val carryOver = tgt.join(touched, Seq("src"), "left_anti")
+        val grp = tgt.join(touched, Seq("src"), "left_semi")
+          .select($"src", $"dst", $"w")
+          .unionByName(delta.select($"src", $"dst", $"w"))
+        val mergedRows = carryOver.unionByName(
+          grp.join(grp.groupBy($"src").agg(sum($"w").as("out_w")), "src")
+            .select($"src", $"dst", $"w", $"out_w"))
         // r19 (guide §6 — small files hurt twice): the merge plan's
         // union (carry-over ⋈ anti-join side + rebuilt groups) reaches
         // the bucketed write with ~60 upstream tasks, and a bucketed
@@ -1121,22 +1117,8 @@ object Graph {
         // mapping (HashPartitioning = pmod(murmur3(src), 32), exactly
         // what bucketBy computes), so each task holds exactly one
         // bucket and the table lands as one file per bucket.
-        mergeOf(s.table(base))
-          .repartition(32, $"src")
-          .write.mode("overwrite").bucketBy(32, "src").sortBy("src")
-          .format("parquet").saveAsTable(merged)
-        // verify BEFORE the swap: logical merge vs read-back, 64
-        // fingerprint buckets — the tableMergeStream gate
-        val bad = MetadataOps
-          .fnvFingerprints(mergeOf(s.table(base)), "src")
-          .join(MetadataOps.fnvFingerprints(s.table(merged), "dst"),
-            Seq("bucket"), "full_outer")
-          .filter(!($"src_rows" <=> $"dst_rows" && $"src_xor" <=> $"dst_xor" &&
-            $"src_sum" <=> $"dst_sum"))
-          .count()
-        if (bad > 0) throw new IllegalStateException(
-          s"edge-index merge generation $merged failed fingerprint " +
-            s"verification in $bad/64 buckets — not swapped in")
+        IndexUtil.writeVerifiedGeneration(mergedRows.repartition(32, $"src"),
+          merged, 32, Seq("src"), Seq("src"), "edge-index merge")
         IndexUtil.dropIndexTable(s, base) // commit point: merged is live
       } finally edges.unpersist(blocking = false)
       prMergeBuilt.add(d)

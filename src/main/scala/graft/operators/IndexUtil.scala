@@ -78,60 +78,73 @@ private[graft] object IndexUtil {
     * elides the repartition as satisfied by the nominal scan
     * partitioning, then the demotion un-satisfies it — measured,
     * 13 mixed-bucket files from 4 size-split tasks).
-    * The result is FINGERPRINT-VERIFIED BEFORE the swap — compaction
-    * must be invisible to every query. The write job itself observes
-    * the source rows' (count, bit_xor, Σ mod 2^40) of
-    * [[MetadataOps.fnvRowFingerprint]] (an `Observation` on the
-    * written frame, so the source is read once), and only the
-    * compacted generation is read back for the same triple. On a
-    * mismatch the 64-bucket full-outer diagnosis
-    * ([[MetadataOps.fnvFingerprints]] of both sides) counts the bad
-    * buckets for the failure message; the fragmented table stays
-    * live. On a match the fragmented table drops: the generation-swap
-    * commit discipline. `rewrite` is a fault-injection seam for
-    * specs: it sees the rows after the source is observed and before
-    * they are written (identity in every real caller).
+    * The result is written and FINGERPRINT-VERIFIED through
+    * [[writeVerifiedGeneration]] before the swap — compaction must be
+    * invisible to every query; the fragmented table drops only on a
+    * match. `rewrite` passes through to it.
     * At 100 TB compaction runs partition-scoped and incremental —
     * only partitions whose generation count crossed a threshold
     * rewrite (the Delta OPTIMIZE / LSM-compaction posture). */
   def compactTable(s: SparkSession, frag: String, compacted: String,
       buckets: Int, bucketCols: Seq[String], sortCols: Seq[String],
       rewrite: DataFrame => DataFrame = identity): Unit = {
-    // drop the TARGET first, catalog AND disk (the writeMergeGeneration
-    // discipline): a previous JVM's run may have left the location
-    // behind with no in-memory catalog entry, and saveAsTable fails on
-    // an existing location it doesn't know about
-    dropIndexTable(s, compacted)
     val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val prevAuto = s.conf.getOption(autoKey)
     s.conf.set(autoKey, "false")
-    val source = s.table(frag)
-    val totals = fingerprintTotals(source)
-    val obs = Observation()
-    try {
-      rewrite(source.observe(obs, totals.head, totals.tail: _*))
-        .write.mode("overwrite")
-        .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-        .sortBy(sortCols.head, sortCols.tail: _*)
-        .format("parquet").saveAsTable(compacted)
-    } finally prevAuto match {
+    try writeVerifiedGeneration(s.table(frag), compacted, buckets, bucketCols,
+      sortCols, "compacted", rewrite)
+    finally prevAuto match {
       case Some(v) => s.conf.set(autoKey, v)
       case None => s.conf.unset(autoKey)
     }
-    val written = observed(obs, compacted)
-    val target = s.table(compacted)
+    dropIndexTable(s, frag) // commit point: compacted is live
+  }
+
+  /** Write `rows` as the bucketed index generation `tbl` and VERIFY it
+    * before any caller swaps it in — the one write path of every
+    * index generation (compaction, the keyed merges, the merge
+    * stream). `tbl` is dropped first, catalog AND disk: a previous
+    * JVM's run may have left the location behind with no in-memory
+    * catalog entry, and saveAsTable fails on an existing location it
+    * doesn't know about.
+    *
+    * The write job itself observes the rows' (count, bit_xor, Σ mod
+    * 2^40) of [[MetadataOps.fnvRowFingerprint]] — an `Observation` on
+    * the frame the writer consumes (after any repartition, so it is
+    * counted in the write's own stage and `rows` is evaluated once) —
+    * and only `tbl` is read back for the same triple. On a mismatch
+    * the 64-bucket full-outer diagnosis ([[MetadataOps
+    * .fnvFingerprints]] of `rows` against `tbl`) counts the bad
+    * buckets for the failure message, and nothing is swapped: the
+    * caller's commit point (dropping the old generation) is never
+    * reached. `rewrite` is a fault-injection seam for specs: it sees
+    * the rows after they are observed and before they are written
+    * (identity in every real caller). */
+  def writeVerifiedGeneration(rows: DataFrame, tbl: String, buckets: Int,
+      bucketCols: Seq[String], sortCols: Seq[String], what: String,
+      rewrite: DataFrame => DataFrame = identity): Unit = {
+    val s = rows.sparkSession
+    dropIndexTable(s, tbl)
+    val totals = fingerprintTotals(rows)
+    val obs = Observation()
+    rewrite(rows.observe(obs, totals.head, totals.tail: _*))
+      .write.mode("overwrite")
+      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
+      .sortBy(sortCols.head, sortCols.tail: _*)
+      .format("parquet").saveAsTable(tbl)
+    val written = observed(obs, tbl)
+    val target = s.table(tbl)
     if (target.select(fingerprintTotals(target): _*).head().toSeq != written.toSeq) {
-      val bad = MetadataOps.fnvFingerprints(source, "src")
+      val bad = MetadataOps.fnvFingerprints(rows, "src")
         .join(MetadataOps.fnvFingerprints(target, "dst"), Seq("bucket"), "full_outer")
         .filter(!(col("src_rows") <=> col("dst_rows") &&
           col("src_xor") <=> col("dst_xor") &&
           col("src_sum") <=> col("dst_sum")))
         .count()
       throw new IllegalStateException(
-        s"compacted generation $compacted failed fingerprint " +
+        s"$what generation $tbl failed fingerprint " +
           s"verification in $bad/64 buckets — not swapped in")
     }
-    dropIndexTable(s, frag) // commit point: compacted is live
   }
 
   /** Whole-table (rows, bit_xor, Σ mod 2^40) of the FNV row

@@ -1047,9 +1047,9 @@ object MetadataOps {
       tag: String): String = {
     import s.implicits._
     val base = s"mts_${IndexUtil.dirTag(d)}_$tag"
-    writeMergeGeneration(
+    IndexUtil.writeVerifiedGeneration(
       Tables.documents(s, d).select($"doc_id", $"source", $"n_chars"),
-      s"${base}_g0")
+      s"${base}_g0", 32, Seq("doc_id"), Seq("doc_id"), "merge-stream base")
     // Defensive: the merge stream's guard is in-process only (its leg
     // is idempotent, see AppendGuard) and writes no markers, but clear
     // any BASE-keyed leftovers from older builds anyway — a rebuilt
@@ -1057,19 +1057,6 @@ object MetadataOps {
     IndexUtil.clearCommitMarkers(s, base)
     base
   }
-
-  /** Drop-then-write one bucketed generation of a maintained merge
-    * table — the copy-on-write commit unit of the streaming merge:
-    * same doc_id bucketing as [[fs_table_merge]]'s target so every
-    * generation reads back Exchange-free for the next merge. */
-  private[graft] def writeMergeGeneration(df: DataFrame, tbl: String): Unit = {
-    IndexUtil.dropIndexTable(df.sparkSession, tbl)
-    df.write.mode("overwrite").bucketBy(32, "doc_id").sortBy("doc_id")
-      .format("parquet").saveAsTable(tbl)
-  }
-
-  private[graft] def dropMergeGeneration(s: SparkSession, tbl: String): Unit =
-    IndexUtil.dropIndexTable(s, tbl)
 
   /** Synthetic block-placement model shared by [[fs_balancer_plan]] and
     * [[fs_fsck]] — the inode table's files split into 64-"byte" blocks

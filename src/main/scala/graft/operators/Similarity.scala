@@ -513,10 +513,8 @@ object Similarity {
     *     quantizer from its re-embedded value ([[ivfAssign]] — the
     *     shared write shape of every IVF generation);
     *   - the result is written as the NEXT GENERATION of the same
-    *     cell-bucketed layout, FINGERPRINT-VERIFIED against the
-    *     logical merge BEFORE the swap ([[MetadataOps
-    *     .fnvFingerprints]], 64 buckets — the tableMergeStream
-    *     commit discipline on the vector tier).
+    *     cell-bucketed layout through [[IndexUtil
+    *     .writeVerifiedGeneration]] before the swap.
     *
     * Scale: copy-on-write with a delta-sized Exchange (carry-over
     * rows never leave their cell buckets; only the re-embedded
@@ -551,26 +549,11 @@ object Similarity {
         .bucketBy(8, "cell").sortBy("cell")
         .format("parquet").saveAsTable(base)
       val reEmbedded = e.filter(pmod($"vec_id", lit(9)) === 4)
-      def mergeOf(tgt: DataFrame): DataFrame = {
-        val touched = reEmbedded.select($"vec_id".as("nid")).distinct()
-        tgt.join(touched, Seq("nid"), "left_anti")
-          .unionByName(ivfAssign(reEmbedded, cents))
-      }
-      mergeOf(s.table(base)).write.mode("overwrite")
-        .bucketBy(8, "cell").sortBy("cell")
-        .format("parquet").saveAsTable(merged)
-      // verify BEFORE the swap: logical merge vs read-back, 64
-      // fingerprint buckets — the tableMergeStream gate
-      val bad = MetadataOps
-        .fnvFingerprints(mergeOf(s.table(base)), "src")
-        .join(MetadataOps.fnvFingerprints(s.table(merged), "dst"),
-          Seq("bucket"), "full_outer")
-        .filter(!($"src_rows" <=> $"dst_rows" && $"src_xor" <=> $"dst_xor" &&
-          $"src_sum" <=> $"dst_sum"))
-        .count()
-      if (bad > 0) throw new IllegalStateException(
-        s"IVF-list merge generation $merged failed fingerprint " +
-          s"verification in $bad/64 buckets — not swapped in")
+      val touched = reEmbedded.select($"vec_id".as("nid")).distinct()
+      val mergedRows = s.table(base).join(touched, Seq("nid"), "left_anti")
+        .unionByName(ivfAssign(reEmbedded, cents))
+      IndexUtil.writeVerifiedGeneration(mergedRows, merged, 8, Seq("cell"),
+        Seq("cell"), "IVF-list merge")
       dropIndexTable(s, base) // commit point: merged is live
       ivfMergeBuilt.add(d)
     } }

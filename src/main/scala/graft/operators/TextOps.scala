@@ -1700,12 +1700,9 @@ object TextOps {
     *   - each touched doc's postings are REBUILT from its re-crawled
     *     text ([[postingsOf]] — the exact build expression);
     *   - the result is written as the NEXT GENERATION of the same
-    *     term-bucketed layout, FINGERPRINT-VERIFIED against the
-    *     logical merge ([[MetadataOps.fnvFingerprints]], 64 buckets —
-    *     a posting row lost, doubled or corrupted in the write fails
-    *     the build BEFORE the swap), and only then swapped in (drop
-    *     the stale generation) — the tableMergeStream commit
-    *     discipline on the text tier.
+    *     term-bucketed layout through [[IndexUtil
+    *     .writeVerifiedGeneration]], and only then swapped in (drop
+    *     the stale generation).
     *
     * Scale: copy-on-write — one bucketed rewrite whose Exchange is
     * delta-sized (carry-over rows never leave their term buckets; the
@@ -1737,29 +1734,14 @@ object TextOps {
           .otherwise($"text"))
       writePostings(firstCrawl, base, mode = "overwrite")
       val recrawled = docs.filter($"doc_id" % 10 === 4)
-      def mergeOf(tgt: DataFrame): DataFrame = {
-        val touched = recrawled.select($"doc_id").distinct()
-        // re-select: the USING-column anti-join moves doc_id first;
-        // the next generation must keep the base schema order
-        tgt.join(touched, Seq("doc_id"), "left_anti")
-          .unionByName(postingsOf(recrawled))
-          .select($"term", $"doc_id", $"tf")
-      }
-      mergeOf(s.table(base))
-        .write.mode("overwrite").bucketBy(8, "term").sortBy("term")
-        .format("parquet").saveAsTable(merged)
-      // verify BEFORE the swap: logical merge vs read-back, 64
-      // fingerprint buckets — the tableMergeStream gate
-      val bad = MetadataOps
-        .fnvFingerprints(mergeOf(s.table(base)), "src")
-        .join(MetadataOps.fnvFingerprints(s.table(merged), "dst"),
-          Seq("bucket"), "full_outer")
-        .filter(!($"src_rows" <=> $"dst_rows" && $"src_xor" <=> $"dst_xor" &&
-          $"src_sum" <=> $"dst_sum"))
-        .count()
-      if (bad > 0) throw new IllegalStateException(
-        s"postings merge generation $merged failed fingerprint " +
-          s"verification in $bad/64 buckets — not swapped in")
+      val touched = recrawled.select($"doc_id").distinct()
+      // re-select: the USING-column anti-join moves doc_id first;
+      // the next generation must keep the base schema order
+      val mergedRows = s.table(base).join(touched, Seq("doc_id"), "left_anti")
+        .unionByName(postingsOf(recrawled))
+        .select($"term", $"doc_id", $"tf")
+      IndexUtil.writeVerifiedGeneration(mergedRows, merged, 8, Seq("term"),
+        Seq("term"), "postings merge")
       IndexUtil.dropIndexTable(s, base) // commit point: merged is live
       searchMergeBuilt.add(d)
     } }

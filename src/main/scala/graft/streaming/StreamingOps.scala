@@ -1312,20 +1312,19 @@ object StreamingOps extends Serializable {
     * {U, D, I}) MERGED into the current generation of a doc_id-
     * bucketed target table via the same
     * [[graft.operators.MetadataOps.mergeUpsert]] kernel, written as
-    * the NEXT generation (`<base>_g<n>`), fingerprint-verified, and
-    * only then swapped in — DistCp `-update`'s copy-if-changed row
+    * the NEXT generation (`<base>_g<n>`) through [[graft.operators
+    * .IndexUtil.writeVerifiedGeneration]], and only then swapped in —
+    * DistCp `-update`'s copy-if-changed row
     * semantics made continuous (reference: hadoop-tools/hadoop-distcp/
     * src/main/java/org/apache/hadoop/tools/DistCp.java:1), i.e. the
     * canonical foreachBatch warehouse-maintenance sink.
     *
-    * Per-batch FINGERPRINT VERIFICATION, same gate as the batch form:
-    * [[graft.operators.MetadataOps.fnvFingerprints]] of the read-back
-    * generation vs a logical recomputation of the merge over the
-    * previous generation — a row lost, duplicated, or corrupted in
-    * the merge → write → read-back chain flips its bucket and the
-    * batch FAILS before the swap, so a bad write can never become the
-    * table (the generation swap is the commit point; the half-written
-    * generation is dropped and rebuilt on retry).
+    * A generation that fails verification fails its batch before the
+    * swap, so a bad write can never become the table (the generation
+    * swap is the commit point; the half-written generation is dropped
+    * and rebuilt on retry). The batch is not cached: the write reads
+    * it once, a replay not at all, and only a failed verification's
+    * diagnosis reads it again.
     *
     * REPLAY guard: the merge-write leg is guarded per batchId like
     * the index appends — a replayed batch re-delivers the current
@@ -1367,7 +1366,7 @@ object StreamingOps extends Serializable {
     * generation read back (pinned for the duration of the call). */
   def tableMergeStream(deltas: DataFrame, tgtBase: String,
       onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.MetadataOps
+    import graft.operators.{IndexUtil, MetadataOps}
     val sess = deltas.sparkSession
     val guard = new AppendGuard(sess, tgtBase, idempotent = true)
     // Discover the live generation from the catalog at start (r18
@@ -1388,34 +1387,20 @@ object StreamingOps extends Serializable {
     deltas.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        val b = batch.persist()
+        guard(batchId, "merge") {
+          val gen = curGen.get()
+          val cur = s"${tgtBase}_g$gen"
+          IndexUtil.writeVerifiedGeneration(
+            MetadataOps.mergeUpsert(s.table(cur), batch), s"${tgtBase}_g${gen + 1}",
+            32, Seq("doc_id"), Seq("doc_id"), s"batch $batchId merge")
+          curGen.set(gen + 1) // commit point: the new generation is live
+          IndexUtil.dropIndexTable(s, cur)
+        }
+        val res = s.table(s"${tgtBase}_g${curGen.get()}").persist()
         try {
-          guard(batchId, "merge") {
-            val gen = curGen.get()
-            val cur = s"${tgtBase}_g$gen"
-            val next = s"${tgtBase}_g${gen + 1}"
-            MetadataOps.writeMergeGeneration(
-              MetadataOps.mergeUpsert(s.table(cur), b), next)
-            val bad = MetadataOps
-              .fnvFingerprints(MetadataOps.mergeUpsert(s.table(cur), b), "src")
-              .join(MetadataOps.fnvFingerprints(s.table(next), "dst"),
-                Seq("bucket"), "full_outer")
-              .filter(!(col("src_rows") <=> col("dst_rows") &&
-                col("src_xor") <=> col("dst_xor") &&
-                col("src_sum") <=> col("dst_sum")))
-              .count()
-            if (bad > 0) throw new IllegalStateException(
-              s"merge generation $next failed fingerprint verification " +
-                s"in $bad/64 buckets — batch $batchId not committed")
-            curGen.set(gen + 1) // commit point: the new generation is live
-            MetadataOps.dropMergeGeneration(s, cur)
-          }
-          val res = s.table(s"${tgtBase}_g${curGen.get()}").persist()
-          try {
-            res.count()
-            onBatch(res)
-          } finally res.unpersist(blocking = false)
-        } finally b.unpersist(blocking = false)
+          res.count()
+          onBatch(res)
+        } finally res.unpersist(blocking = false)
     }.start()
   }
 

@@ -1683,4 +1683,45 @@ class StreamingSpec extends SparkSpec {
     assert(spark.catalog.tableExists(s"${base}_g2"),
       "restart did not continue the generation chain from the discovered g1")
   }
+
+  test("writeVerifiedGeneration refuses a lost, duplicated or changed row and leaves the source generation untouched") {
+    // the one failure path every index generation write shares, in the
+    // merge stream's layout (32 buckets on doc_id) and fed through a
+    // repartition (the graph merge's shape), so the observation sits
+    // above an Exchange
+    import spark.implicits._
+    import graft.operators.{IndexUtil, MetadataOps}
+    val base = MetadataOps.mergeStreamTarget(spark, sf0001, "vgate")
+    val (src, next) = (s"${base}_g0", s"${base}_g1")
+    def rows(tbl: String = src) = spark.table(tbl).as[(Long, String, Long)].collect().toSeq.sorted
+    val before = rows()
+    val victim = before.minBy(_._1)
+    val isVictim = $"doc_id" === victim._1
+    val faults = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "lost row" -> (_.filter(!isVictim)),
+      "duplicated row" -> (df => df.unionByName(
+        Seq(victim).toDF("doc_id", "source", "n_chars"))),
+      "changed n_chars" -> (_.withColumn("n_chars",
+        when(isVictim, $"n_chars" + 1).otherwise($"n_chars"))))
+    val msg = """batch 7 merge generation (\S+) failed fingerprint verification in (\d+)/64 buckets — not swapped in""".r
+    for ((fault, rewrite) <- faults) {
+      val e = intercept[IllegalStateException] {
+        IndexUtil.writeVerifiedGeneration(spark.table(src).repartition(32, $"doc_id"),
+          next, 32, Seq("doc_id"), Seq("doc_id"), "batch 7 merge", rewrite)
+      }
+      e.getMessage match {
+        case msg(tbl, bad) =>
+          assert(tbl == next && bad.toInt >= 1, s"$fault: ${e.getMessage}")
+        case other => fail(s"$fault: unexpected failure message: $other")
+      }
+      assert(spark.catalog.tableExists(src) && rows() == before,
+        s"$fault: the source generation did not survive the refused write")
+    }
+    // control: the same write without a fault verifies, one file per bucket
+    IndexUtil.writeVerifiedGeneration(spark.table(src).repartition(32, $"doc_id"),
+      next, 32, Seq("doc_id"), Seq("doc_id"), "batch 7 merge")
+    assert(rows(next) == before)
+    assert(IndexUtil.dataFileCount(spark, next) <= 32)
+    Seq(src, next).foreach(IndexUtil.dropIndexTable(spark, _))
+  }
 }
