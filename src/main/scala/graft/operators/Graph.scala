@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -23,43 +23,40 @@ import org.apache.spark.storage.StorageLevel
   */
 object Graph {
 
-  /** Per-round persist bookkeeping + LogicalRDD rebinding for a fixed
-    * iteration loop (the dedup_clusters pattern, Dedup.scala:628):
-    * rebinding each round's frontier to its materialized rows keeps
-    * the logical plan tree constant-size instead of doubling per
-    * round, and the previous round's cache entry is dropped as soon
-    * as the next one is materialized. */
-  private def materializeRound(df: DataFrame): DataFrame = {
-    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    cached.count()
-    cached
+  /** One materialized superstep round: the persisted round `cache`
+    * (the caller unpersists or tracks it), its partitioning-preserving
+    * rebind `state` (the next round's input) and the round's
+    * convergence count `n`. */
+  private[graft] final case class Round(cache: DataFrame, state: DataFrame, n: Long)
+
+  /** Materialize one superstep round in ONE action. `df` is persisted,
+    * and a single `noop` write over the cached frame fills the cache
+    * while an `Observation` of `agg` (a Long-valued aggregate, null →
+    * 0; read through [[IndexUtil.observed]]) counts the round's
+    * convergence figure in the write's own stage: the round pays the
+    * cache stage and that one stage, with no partial and final
+    * aggregate jobs to bring one Long back. The state
+    * comes back already rebound, so [[rebind]] only ever sees a
+    * materialized cache; rebinding keeps the logical plan
+    * constant-size over any round count and the cache's hash
+    * partitioning visible to the next round's node-keyed join. */
+  private[graft] def materializeRound(df: DataFrame, agg: Column): Round = {
+    val cache = df.persist(StorageLevel.MEMORY_AND_DISK)
+    val obs = Observation()
+    cache.observe(obs, coalesce(agg, lit(0L)).as("n"))
+      .write.format("noop").mode("overwrite").save()
+    val n = IndexUtil.observed(obs, "superstep round").getLong(0)
+    Round(cache, rebind(cache), n)
   }
 
-  /** Materialize a round AND return a scalar aggregate over it in ONE
-    * job — the dedup_clusters convergence device (Dedup.scala:646):
-    * the aggregate action is what populates the cache, so a loop's
-    * per-round bookkeeping (convergence count, removal count) costs
-    * zero extra job submissions instead of a dedicated count() plus a
-    * separate aggregate job per superstep. `agg` must be a single
-    * Long-valued aggregate expression (null → 0). */
-  private def materializeWith(df: DataFrame, agg: org.apache.spark.sql.Column)
-      : (DataFrame, Long) = {
-    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    val n = cached.agg(agg).collect()(0) match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0)
-    }
-    (cached, n)
-  }
-
-  /** r20: partitioning-preserving rebind (see
-    * [[org.apache.spark.sql.graft.Rebind]]). The old
-    * `createDataFrame(cached.rdd, schema)` form erased the cached
-    * round's hash partitioning — so every superstep re-Exchanged the
-    * node-sized state (r19 verdict #7) — and paid an InternalRow →
-    * Row → InternalRow conversion per row per consumer. The caller
-    * must have materialized `cached` first (persist + count), which
-    * every loop here does via [[materializeRound]]/[[materializeWith]]. */
+  /** Partitioning-preserving rebind (see
+    * [[org.apache.spark.sql.graft.Rebind]]): a LogicalRDD over the
+    * cached rows that keeps their hash partitioning and ordering, so
+    * the next round's node-keyed join or aggregate does not
+    * re-Exchange the state. Rebind claims that layout only for a
+    * materialized cache and degrades to UnknownPartitioning otherwise;
+    * the loops get their rebound state from [[materializeRound]], and
+    * the one-shot outputs rebind after their own `count()`. */
   private def rebind(cached: DataFrame): DataFrame =
     org.apache.spark.sql.graft.Rebind.preserving(cached)
 
@@ -139,12 +136,12 @@ object Graph {
         // a filter + 1-row aggregate over the state instead of a
         // ranks-vs-srcs anti-join (at scale: one fewer Exchange+sort
         // of the node-sized state per round, 8 rounds).
-        var cached = materializeRound(
+        var round = materializeRound(
           nodes.withColumn("rank", lit(1000000000L))
             .join(outW.select($"src".as("node"), lit(true).as("has_out")),
               Seq("node"), "left")
-            .select($"node", $"rank", coalesce($"has_out", lit(false)).as("has_out")))
-        var ranks = rebind(cached)
+            .select($"node", $"rank", coalesce($"has_out", lit(false)).as("has_out")),
+          count(lit(1)))
         // r17 superstep fold: the round's LEFT side is the previous
         // rank state itself (same node set as `nodes` — a loop
         // invariant), so the old rank rides the round for free and the
@@ -153,44 +150,50 @@ object Graph {
         // round i ≡ round i−1 implies every remaining round is
         // identical — the lpaLoop argument; the oracle still unrolls
         // all `iters` rounds and agreement proves any skip was sound).
-        var round = 1
+        var r = 1
         var converged = false
-        while (round <= iters && !converged) {
+        while (r <= iters && !converged) {
+          val ranks = round.state
           val inflow = edges
             .join(ranks, edges("src") === ranks("node"))
             .join(outW, Seq("src"))
             .select($"dst", expr("rank * w div out_w").as("contrib"))
             .groupBy($"dst").agg(sum($"contrib").as("inflow"))
-          val dangling = ranks.filter(!$"has_out")
-            .agg(coalesce(sum($"rank"), lit(0L)).as("dang"))
-          val old = ranks.select($"node", $"rank".as("old"), $"has_out")
-          val next = old
-            .join(inflow, old("node") === inflow("dst"), "left")
-            .crossJoin(broadcast(dangling))
-            .select(old("node"),
-              (lit(150000000L) +
-                expr(s"85 * (coalesce(inflow, 0L) + dang div ${n}L) div 100")
-              ).as("rank"), $"old", $"has_out")
-          val (nextCached, changed) = materializeWith(next,
+          val nextRound = materializeRound(rankRound(ranks, inflow, n),
             sum(when($"rank" =!= $"old", lit(1L)).otherwise(lit(0L))))
-          converged = changed == 0
-          cached.unpersist(blocking = false)
-          cached = nextCached
-          ranks = rebind(cached).select($"node", $"rank", $"has_out")
-          round += 1
+          converged = nextRound.n == 0
+          round.cache.unpersist(blocking = false)
+          round = nextRound
+          r += 1
         }
-        val out = ranks.select($"node".as("page"), $"rank")
-        // materialize before releasing the loop caches the plan reads
-        val rows = out.persist(StorageLevel.MEMORY_AND_DISK)
-        rows.count()
-        graft.CacheRegistry.track(rows)
-        cached.unpersist(blocking = false)
-        rebind(rows).orderBy($"rank".desc, $"page")
+        // the last round's state IS the result: its cache stays
+        // tracked until the consumer's releaseAll
+        graft.CacheRegistry.track(round.cache)
+        round.state.select($"node".as("page"), $"rank")
+          .orderBy($"rank".desc, $"page")
       } finally {
         outW.unpersist(blocking = false)
         nodes.unpersist(blocking = false)
       }
     } finally edges.unpersist(blocking = false)
+  }
+
+  /** One pagerank update over the rank state and the round's inflow:
+    * the teleport term plus the damped inflow and the dangling mass
+    * spread over all `n` nodes. The previous rank rides along as
+    * `old`, so the materializing action doubles as the fixpoint
+    * count. Shared by [[graph_pagerank]] and [[pagerankOverIndex]]. */
+  private def rankRound(ranks: DataFrame, inflow: DataFrame, n: Long): DataFrame = {
+    import ranks.sparkSession.implicits._
+    val dangling = ranks.filter(!$"has_out")
+      .agg(coalesce(sum($"rank"), lit(0L)).as("dang"))
+    val old = ranks.select($"node", $"rank".as("old"), $"has_out")
+    old.join(inflow, old("node") === inflow("dst"), "left")
+      .crossJoin(broadcast(dangling))
+      .select(old("node"),
+        (lit(150000000L) +
+          expr(s"85 * (coalesce(inflow, 0L) + dang div ${n}L) div 100")
+        ).as("rank"), $"old", $"has_out")
   }
 
   /** TRIANGLE COUNTING on the co-supplier graph (suppliers that
@@ -371,29 +374,39 @@ object Graph {
     * persistence. */
   private[graft] def coSupplierEdges(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // r19: per-order sorted-array pair enumeration replaces the os
-    // self-join. The self-join recomputed its whole lineage per leg
-    // (two lineitem scans, two distincts) and paid a third Exchange
-    // for the join itself; collect_set(sk) per order is the same
-    // distinct, delivered in ONE scan + ONE Exchange, and the ordered
-    // pairs (x at i, y after i over the ascending array) are exactly
-    // the a.sk < b.sk join output. Unlike the triangles wedge-array
-    // dead end (uncapped fans, TriExp), the fan here is the ORDER'S
-    // line count — bounded at 7 by the data model — so each pair
-    // array is ≤ C(7,2) = 21 entries: no GC hazard at any scale.
-    // Identical e0 rows ⇒ every downstream oracle unchanged.
-    Tables.lineitem(s, d)
+    // r19: per-order pair enumeration replaces the os self-join. The
+    // self-join recomputed its whole lineage per leg (two lineitem
+    // scans, two distincts) and paid a third Exchange for the join
+    // itself; collect_set(sk) per order is the same distinct,
+    // delivered in ONE scan + ONE Exchange, and its u < v pairs
+    // ([[arrayPairs]]) are exactly the a.sk < b.sk join output.
+    // Unlike the triangles wedge-array dead end (uncapped fans), the
+    // fan here is the ORDER'S line count — bounded at 7 by the data
+    // model — so each order yields ≤ 7² candidate pairs: no GC hazard
+    // at any scale. Identical e0 rows ⇒ every downstream oracle
+    // unchanged.
+    arrayPairs(Tables.lineitem(s, d)
       .select($"l_orderkey".as("ok"), $"l_suppkey".as("sk"))
-      .groupBy($"ok").agg(sort_array(collect_set($"sk")).as("ss"))
-      .select(explode(expr(
-        "flatten(transform(ss, (x, i) -> " +
-          "transform(slice(ss, i + 2, size(ss)), y -> struct(x AS u, y AS v))))"
-      )).as("p"))
-      .groupBy($"p.u".as("u"), $"p.v".as("v"))
+      .groupBy($"ok").agg(collect_set($"sk").as("ss")), "ss")
+      .groupBy($"u", $"v")
       .agg(count(lit(1)).as("support"))
       .filter($"support" >= 2)
       .select($"u", $"v")
   }
+
+  /** Every pair (u, v), u < v, of two elements of the array column
+    * `arr` — the pair enumeration behind [[coSupplierEdges]],
+    * [[partEdges]] and [[jaccardScore]]. The elements must be
+    * distinct (a collect_set, or one node's neighbors); their order
+    * does not matter. Two explodes and a filter compile into the
+    * stage's generated code, where the flatten(transform(slice(…)))
+    * lambdas this replaced ran interpreted; every caller bounds the
+    * array size, so the |arr|² candidates before the filter stay
+    * small. */
+  private def arrayPairs(df: DataFrame, arr: String): DataFrame =
+    df.select(explode(col(arr)).as("u"), col(arr))
+      .select(col("u"), explode(col(arr)).as("v"))
+      .filter(col("u") < col("v"))
 
   /** The LPA superstep loop over a caller-persisted adjacency:
     * returns the materialized, cache-tracked (node, label) table.
@@ -413,12 +426,12 @@ object Graph {
     // sort dominates and shuffle_hash wins 2x (see
     // trianglesIndexPlan).
     val joinSide = if (mergeHint) adj.hint("merge") else adj
-    var cached = materializeRound(
-      adj.select($"node").distinct().withColumn("label", $"node"))
-    var labels = rebind(cached)
+    var round = materializeRound(
+      adj.select($"node").distinct().withColumn("label", $"node"), count(lit(1)))
     var i = 1
     var converged = false
     while (i <= iters && !converged) {
+      val labels = round.state.select($"node", $"label")
       val votes = joinSide
         .join(labels.select($"node".as("nbr"), $"label"), "nbr")
         .groupBy($"node", $"label").agg(count(lit(1)).as("cnt"))
@@ -437,16 +450,15 @@ object Graph {
       // function of the label table, so round i ≡ round i−1 implies
       // every remaining round is identical. The oracle still unrolls
       // all `iters` rounds — agreement proves the skip was sound.
-      val (nextCached, changed) = materializeWith(next,
+      val nextRound = materializeRound(next,
         sum(when($"label" =!= $"old", 1L).otherwise(0L)))
-      converged = changed == 0
-      cached.unpersist(blocking = false)
-      cached = nextCached
-      labels = rebind(cached).select($"node", $"label")
+      converged = nextRound.n == 0
+      round.cache.unpersist(blocking = false)
+      round = nextRound
       i += 1
     }
-    graft.CacheRegistry.track(cached)
-    labels
+    graft.CacheRegistry.track(round.cache)
+    round.state.select($"node", $"label")
   }
 
   def graph_label_prop(s: SparkSession, d: String, iters: Int = 6): DataFrame = {
@@ -522,11 +534,11 @@ object Graph {
     val seeds = adj.select($"node").distinct()
       .filter($"node" % 10 === 0)
       .select($"node", lit(0L).as("dist"), $"node".as("seed"))
-    var cached = materializeRound(seeds)
-    var state = rebind(cached)
+    var round = materializeRound(seeds, count(lit(1)))
     var i = 1
     var converged = false
     while (i <= iters && !converged) {
+      val state = round.state.select($"node", $"dist", $"seed")
       // the node's own prior state rides the union with a marker, so
       // ONE argmin aggregate yields both the relaxed state and the
       // fixpoint delta (old = min over own rows — at most one per
@@ -547,20 +559,16 @@ object Graph {
       // function of the state table (the lexicographic min can only
       // move down), so an unchanged round implies all remaining
       // rounds are identical; the oracle still unrolls all rounds
-      val (nextCached, changed) = materializeWith(next,
+      val nextRound = materializeRound(next,
         sum(when($"moved", 1L).otherwise(0L)))
-      converged = changed == 0
-      cached.unpersist(blocking = false)
-      cached = nextCached
-      state = rebind(cached).select($"node", $"dist", $"seed")
+      converged = nextRound.n == 0
+      round.cache.unpersist(blocking = false)
+      round = nextRound
       i += 1
     }
-    val out = state.select($"node".as("s_suppkey"), $"dist", $"seed")
-    val rows = out.persist(StorageLevel.MEMORY_AND_DISK)
-    rows.count()
-    graft.CacheRegistry.track(rows)
-    cached.unpersist(blocking = false)
-    rebind(rows).orderBy($"s_suppkey")
+    graft.CacheRegistry.track(round.cache)
+    round.state.select($"node".as("s_suppkey"), $"dist", $"seed")
+      .orderBy($"s_suppkey")
   }
 
   /** MULTI-SOURCE BFS over the PERSISTED adjacency index — the SAME
@@ -663,27 +671,35 @@ object Graph {
     * k-core formulation): degrees are counted ONCE (one
     * map-side-combined aggregate over the persisted adjacency), and
     * every round after that touches only the DELTA — the nodes
-    * removed this round. Round r: removed = deg-state rows with
-    * deg < k (a filter, no join); surviving neighbors decrement by
-    * one adjacency ⋈ broadcast(removed) map-side join (the removed
-    * set is round-sized, not graph-sized); the 20k-row deg-state
-    * re-materializes per round with the LogicalRDD rebind keeping
-    * plans constant-size. Decrement-from-initial is exactly
-    * restrict-and-recount (each removed neighbor subtracts its one
-    * edge), so the peel is bit-identical to the naive form at a
-    * fraction of the round cost — the naive two-semi-join round
-    * re-scanned the full adjacency twice per round (measured 15.5 s
-    * at sf0.1; delta form replaces that with one broadcast probe).
-    * Fixed 6 rounds bound the superstep count (measured fixpoint: 3
-    * rounds at sf0.001, 2 at sf0.1 — 2x margin) with a FREE fixpoint
-    * short-circuit (an empty removal round leaves the state unchanged,
-    * so remaining rounds are provable no-ops — the oracle still
-    * unrolls all 6, and agreement proves the skip was sound);
-    * GraphSpec asserts the fixpoint lands within the bound. Edge
-    * generation is the per-order C(items, 2) self-join — bounded per
-    * order, embarrassingly parallel. Exact integer counting
-    * throughout → the whole peel replays as 6 unrolled MATERIALIZED
-    * CTE rounds in DuckDB. */
+    * removed this round. The node state (node, deg, peel_round)
+    * covers every node: `peel_round` is 0 while the node is alive and
+    * the round that removes it once it is flagged, so the state
+    * itself is the decomposition and the result is a projection of
+    * the last state. Round r: the nodes flagged r (a filter, no join)
+    * probe the adjacency through one map-side broadcast join (the
+    * removed set is round-sized, not graph-sized), alive neighbors
+    * decrement, and those falling below k are flagged r + 1. Each
+    * round is ONE materializing action ([[materializeRound]]): the
+    * state is persisted and filled by a noop write that also observes
+    * the count flagged for the next round, and the state comes back
+    * rebound with its hash(node) layout, so the next round's
+    * decrement aggregate and state join stay Exchange-free.
+    * Decrement-from-initial is exactly restrict-and-recount (each
+    * removed neighbor subtracts its one edge), so the peel is
+    * bit-identical to the naive form at a fraction of the round cost
+    * — the naive two-semi-join round re-scanned the full adjacency
+    * twice per round (measured 15.5 s at sf0.1; delta form replaces
+    * that with one broadcast probe). Fixed 6 rounds bound the
+    * superstep count (measured fixpoint: 3 rounds at sf0.001, 2 at
+    * sf0.1 — 2x margin) with a FREE fixpoint short-circuit (a state
+    * that flags nobody is final, so remaining rounds are provable
+    * no-ops — the oracle still unrolls all 6, and agreement proves
+    * the skip was sound); GraphSpec asserts the fixpoint lands within
+    * the bound, and that a peel cut off early matches the sequential
+    * peel cut off at the same round. Edge generation is the per-order
+    * C(items, 2) pair enumeration — bounded per order, embarrassingly
+    * parallel. Exact integer counting throughout → the whole peel
+    * replays as 6 unrolled MATERIALIZED CTE rounds in DuckDB. */
   def graph_kcore(s: SparkSession, d: String, k: Int = 65, iters: Int = 6): DataFrame = {
     import s.implicits._
     val e0 = partEdges(s, d)
@@ -708,92 +724,81 @@ object Graph {
     import s.implicits._
     // r19: same per-order array-pair derivation as [[coSupplierEdges]]
     // (one scan + one Exchange replaces the two-scan self-join; fan
-    // bounded by the order's ≤7 lines); the trailing groupBy IS the
-    // distinct. Identical edge set ⇒ downstream oracles unchanged.
-    Tables.lineitem(s, d)
+    // bounded by the order's ≤7 lines); the trailing distinct merges
+    // the pairs that several orders share. Identical edge set ⇒
+    // downstream oracles unchanged.
+    arrayPairs(Tables.lineitem(s, d)
       .select($"l_orderkey".as("ok"), $"l_partkey".as("pk"))
-      .groupBy($"ok").agg(sort_array(collect_set($"pk")).as("ps"))
-      .select(explode(expr(
-        "flatten(transform(ps, (x, i) -> " +
-          "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS u, y AS v))))"
-      )).as("p"))
-      .select($"p.u".as("u"), $"p.v".as("v")).distinct()
+      .groupBy($"ok").agg(collect_set($"pk").as("ps")), "ps")
+      .distinct()
   }
 
   /** The synchronous delta-peel loop over a caller-managed adjacency
     * and initial degree table — shared by [[graph_kcore]] (in-flight
     * derivation) and [[graph_kcore_index]] (persisted part-graph
-    * index, degrees precomputed at build). */
+    * index, degrees precomputed at build). The state covers every
+    * node, alive or peeled, so the result is a projection of the last
+    * round's state: no per-round removal frames to union and no
+    * output copy to persist. The last state stays CacheRegistry-
+    * tracked; every earlier one is released as soon as its successor
+    * materializes. */
   private def kcorePeel(adj: DataFrame, deg0: DataFrame,
       k: Int, iters: Int): DataFrame = {
-    val s = adj.sparkSession
-    import s.implicits._
-    {
-      // ONE materialization per peel round (r17 — the last of the
-      // superstep-count() folds): the round's removal set is a pure
-      // PROJECTION of its new degree state (`rm` = deg < k), so the
-      // flag is computed as a column when the state materializes and
-      // the removal count rides that same action — the previous shape
-      // paid a second job per round materializing the removed set as
-      // its own frame. Removed rows are then cache-local FILTERS of
-      // the flagged state; state frames stay persisted
-      // (CacheRegistry-tracked, node-sized × ≤ iters rounds) until the
-      // output below is materialized, exactly as the removed sets
-      // already did.
-      var (cached, nRemoved) = materializeWith(
-        deg0.withColumn("rm", $"deg" < k),
-        sum(when($"rm", lit(1L)).otherwise(lit(0L))))
-      graft.CacheRegistry.track(cached)
-      // Every round's state frame, so the lot can be unpersisted the
-      // moment the output below materializes (r17 advice: holding all
-      // iters × node-state frames until the consumer's releaseAll
-      // grows peak storage in exactly the persist-heavy family the
-      // memory investigation flagged; after rows.count() nothing
-      // reads them again). CacheRegistry still tracks them — a second
-      // unpersist at releaseAll is a harmless no-op.
-      val roundStates = scala.collection.mutable.ListBuffer[DataFrame](cached)
-      var degState = rebind(cached)
-      val peeled = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      var r = 1
-      var converged = false
-      while (r <= iters && !converged) {
-        peeled += degState.filter($"rm")
-          .select($"node", lit(r.toLong).as("peel_round"))
-        converged = nRemoved == 0
-        if (!converged) {
-          val drops = adj
-            .join(broadcast(degState.filter($"rm").select($"node".as("nbr"))),
-              Seq("nbr"))
-            .groupBy($"node").agg(count(lit(1)).as("dropped"))
-          val next = degState.filter(!$"rm")
-            .join(drops, Seq("node"), "left")
-            .select($"node", ($"deg" - coalesce($"dropped", lit(0L))).as("deg"))
-            .withColumn("rm", $"deg" < k)
-          val (nextCached, nRem) = materializeWith(next,
-            sum(when($"rm", lit(1L)).otherwise(lit(0L))))
-          graft.CacheRegistry.track(nextCached)
-          roundStates += nextCached
-          nRemoved = nRem
-          cached = nextCached
-          degState = rebind(cached)
-        }
-        r += 1
-      }
-      // remaining nodes (0-labeled) are the FULL final state — when
-      // iters exhausts mid-peel the state legitimately still carries
-      // rm=true nodes that round iters+1 would have removed, and the
-      // unrolled oracle labels them 0 the same way
-      val out = peeled
-        .reduce(_.unionByName(_))
-        .unionByName(degState.select($"node", lit(0L).as("peel_round")))
-        .select($"node".as("p_partkey"), $"peel_round")
-      val rows = out.persist(StorageLevel.MEMORY_AND_DISK)
-      rows.count()
-      graft.CacheRegistry.track(rows)
-      roundStates.foreach(_.unpersist(blocking = false))
-      rebind(rows).orderBy($"p_partkey")
+    import adj.sparkSession.implicits._
+    var round = materializeRound(kcoreInit(deg0, k), kcoreFlagged(1))
+    var r = 1
+    // state r-1 flags the nodes round r removes; round `iters` is the
+    // last that may remove anything, so state iters - 1 is the last
+    // one needed (nodes a round iters + 1 would remove stay 0)
+    while (r < iters && round.n > 0) {
+      val nextRound = materializeRound(kcoreStep(adj, round.state, k, r),
+        kcoreFlagged(r + 1))
+      round.cache.unpersist(blocking = false)
+      round = nextRound
+      r += 1
     }
+    graft.CacheRegistry.track(round.cache)
+    round.state.select($"node".as("p_partkey"), $"peel_round")
+      .orderBy($"p_partkey")
   }
+
+  /** Round-0 k-core state (node, deg, peel_round): `peel_round` is the
+    * round that removes the node, 0 while it is alive — so the nodes
+    * with degree < k are flagged for round 1 up front. */
+  private[graft] def kcoreInit(deg0: DataFrame, k: Int): DataFrame = {
+    import deg0.sparkSession.implicits._
+    deg0.select($"node", $"deg",
+      when($"deg" < k, lit(1L)).otherwise(lit(0L)).as("peel_round"))
+  }
+
+  /** Round `r` of the delta peel over state r-1: the nodes flagged
+    * `peel_round = r` leave, each alive neighbor's degree drops by the
+    * removed neighbors it had (one adjacency ⋈ broadcast(removed)
+    * probe, which keeps the adjacency's hash(node) layout, so the
+    * decrement aggregate and the state join need no Exchange), and
+    * alive nodes whose degree falls below k are flagged for round
+    * r + 1. A removed node keeps its degree and its round. */
+  private[graft] def kcoreStep(adj: DataFrame, state: DataFrame,
+      k: Int, r: Int): DataFrame = {
+    import adj.sparkSession.implicits._
+    val drops = adj
+      .join(broadcast(state.filter($"peel_round" === r).select($"node".as("nbr"))),
+        Seq("nbr"))
+      .groupBy($"node").agg(count(lit(1)).as("dropped"))
+    state.join(drops, Seq("node"), "left")
+      .select($"node",
+        when($"peel_round" === 0, $"deg" - coalesce($"dropped", lit(0L)))
+          .otherwise($"deg").as("deg"),
+        $"peel_round")
+      .withColumn("peel_round",
+        when($"peel_round" === 0 && $"deg" < k, lit(r + 1L))
+          .otherwise($"peel_round"))
+  }
+
+  /** The convergence figure of a k-core state: how many nodes it
+    * flags for round `r` (0 ⇒ the peel reached its fixpoint). */
+  private[graft] def kcoreFlagged(r: Int): Column =
+    sum(when(col("peel_round") === r, lit(1L)).otherwise(lit(0L)))
 
   /** LINK PREDICTION by common-neighbor Jaccard (Liben-Nowell &
     * Kleinberg 2003 — the classic structural-similarity score) on the
@@ -887,19 +892,15 @@ object Graph {
     // capped fan collects into one ≤fanCap array per center (bounded
     // per-group state — the window cap stays FIRST, so a power-law
     // hub never materializes its raw degree; groupBy(node) rides the
-    // window's partitioning, no new Exchange) and the ordered pairs
-    // fan out of one nested-transform explode — (x at i, y after i)
-    // over the ascending array ≡ the join's a.nbr < b.nbr. Measured
-    // at sf0.1/32t: 3.1–3.8 → 2.3–2.6 s, identical top-100
-    // (JaccardExp; the persist-the-centers variant was SLOWER — the
-    // cache write costs more than the second window it saves).
-    val fans = centers.groupBy($"node")
-      .agg(sort_array(collect_list($"nbr")).as("ns"))
-    val common = fans.select(explode(expr(
-        "flatten(transform(ns, (x, i) -> " +
-          "transform(slice(ns, i + 2, size(ns)), y -> struct(x AS u, y AS v))))"
-      )).as("p"))
-      .groupBy($"p.u".as("u"), $"p.v".as("v"))
+    // window's partitioning, no new Exchange) and its u < v pairs
+    // ([[arrayPairs]]; a node's neighbors are distinct) are the join's
+    // a.nbr < b.nbr. Measured at sf0.1/32t: 3.1–3.8 → 2.3–2.6 s,
+    // identical top-100 (r18 scratch probe; the persist-the-centers
+    // variant was SLOWER — the cache write costs more than the second
+    // window it saves).
+    val fans = centers.groupBy($"node").agg(collect_list($"nbr").as("ns"))
+    val common = arrayPairs(fans, "ns")
+      .groupBy($"u", $"v")
       .agg(count(lit(1)).as("common"))
       .join(edges, Seq("u", "v"), "left_anti")
     common
@@ -1223,7 +1224,7 @@ object Graph {
     import s.implicits._
     // MEASURED DEAD END (r18, don't retry): persisting the index for
     // the loop (the kcore-adjacency play) read 9.9/10.4 s steady vs
-    // 6.8/6.5 s re-scanning per round (PrExp, base/delta at
+    // 6.8/6.5 s re-scanning per round (r18 scratch probe, base/delta at
     // sf0.1/32t) — the cache write + InMemoryRelation scans cost more
     // than 8 page-cached bucketed parquet reads. kcore persists
     // because its probe side is JOINED against a broadcast per round
@@ -1240,47 +1241,34 @@ object Graph {
       // r19: loop-invariant dangling flag on the state (see
       // graph_pagerank) — the per-round anti-join against the srcs
       // table becomes a filter + 1-row aggregate.
-      var cached = materializeRound(
+      var round = materializeRound(
         nodes.withColumn("rank", lit(1000000000L))
           .join(srcs.select($"src".as("node"), lit(true).as("has_out")),
             Seq("node"), "left")
-          .select($"node", $"rank", coalesce($"has_out", lit(false)).as("has_out")))
-      var ranks = rebind(cached)
+          .select($"node", $"rank", coalesce($"has_out", lit(false)).as("has_out")),
+        count(lit(1)))
       // same r17 superstep fold + integer fixpoint early-exit as the
       // in-flight form (see graph_pagerank): the previous rank rides
       // the round on the state-side join input, exact by determinism,
       // pinned by the unchanged unrolled oracle
-      var round = 1
+      var r = 1
       var converged = false
-      while (round <= iters && !converged) {
+      while (r <= iters && !converged) {
+        val ranks = round.state
         val inflow = idx.hint("merge")
           .join(ranks, idx("src") === ranks("node"))
           .select($"dst", expr("rank * w div out_w").as("contrib"))
           .groupBy($"dst").agg(sum($"contrib").as("inflow"))
-        val dangling = ranks.filter(!$"has_out")
-          .agg(coalesce(sum($"rank"), lit(0L)).as("dang"))
-        val old = ranks.select($"node", $"rank".as("old"), $"has_out")
-        val next = old
-          .join(inflow, old("node") === inflow("dst"), "left")
-          .crossJoin(broadcast(dangling))
-          .select(old("node"),
-            (lit(150000000L) +
-              expr(s"85 * (coalesce(inflow, 0L) + dang div ${n}L) div 100")
-            ).as("rank"), $"old", $"has_out")
-        val (nextCached, changed) = materializeWith(next,
+        val nextRound = materializeRound(rankRound(ranks, inflow, n),
           sum(when($"rank" =!= $"old", lit(1L)).otherwise(lit(0L))))
-        converged = changed == 0
-        cached.unpersist(blocking = false)
-        cached = nextCached
-        ranks = rebind(cached).select($"node", $"rank", $"has_out")
-        round += 1
+        converged = nextRound.n == 0
+        round.cache.unpersist(blocking = false)
+        round = nextRound
+        r += 1
       }
-      val out = ranks.select($"node".as("page"), $"rank")
-      val rows = out.persist(StorageLevel.MEMORY_AND_DISK)
-      rows.count()
-      graft.CacheRegistry.track(rows)
-      cached.unpersist(blocking = false)
-      rebind(rows).orderBy($"rank".desc, $"page")
+      graft.CacheRegistry.track(round.cache)
+      round.state.select($"node".as("page"), $"rank")
+        .orderBy($"rank".desc, $"page")
     } finally {
       srcs.unpersist(blocking = false)
       nodes.unpersist(blocking = false)
@@ -1436,7 +1424,7 @@ object Graph {
     * MEASURED DEAD END (r18, don't retry): replacing the wedge
     * SELF-join with per-src sorted arrays + nested-transform pair
     * explode — the exact change that won jaccard 25% (see
-    * [[jaccardScore]]) — benched 7.0 vs 4.7 s steady (TriExp).
+    * [[jaccardScore]]) — benched 7.0 vs 4.7 s steady (r18 scratch probe).
     * The difference is the cap: jaccard's fans are ≤32 so its pair
     * arrays are tiny, while the oriented out-degree here is uncapped
     * (√(2E)-bounded but large) and flatten(transform(…)) must
@@ -1692,9 +1680,10 @@ object Graph {
   }
 
   /** One k-core decrement round over the in-flight adjacency cache
-    * (the node-keyed layout [[graph_kcore]] persists): the broadcast
-    * removal probe preserves partitioning, so the decrement aggregate
-    * and the deg-state join are both Exchange-free. */
+    * (the node-keyed layout [[graph_kcore]] persists), built by the
+    * loop's own [[kcoreInit]], [[materializeRound]] and [[kcoreStep]]:
+    * the broadcast removal probe preserves partitioning, so the
+    * decrement aggregate and the state join are both Exchange-free. */
   private[graft] def kcoreInflightRoundPlan(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val e0 = partEdges(s, d)
@@ -1703,17 +1692,11 @@ object Graph {
         .union(e0.select($"v".as("node"), $"u".as("nbr")))
         .repartition($"node"))
     adj.count() // r20: plan handles materialize like the real loop does
-    val degCache = graft.CacheRegistry.cache(
-      adj.groupBy($"node").agg(count(lit(1)).as("deg"))
-        .withColumn("rm", $"deg" < 65))
-    degCache.count()
-    val deg0 = rebind(degCache)
-    val drops = adj
-      .join(broadcast(deg0.filter($"rm").select($"node".as("nbr"))), Seq("nbr"))
-      .groupBy($"node").agg(count(lit(1)).as("dropped"))
-    deg0.filter(!$"rm")
-      .join(drops, Seq("node"), "left")
-      .select($"node", ($"deg" - coalesce($"dropped", lit(0L))).as("deg"))
+    val round = materializeRound(
+      kcoreInit(adj.groupBy($"node").agg(count(lit(1)).as("deg")), 65),
+      kcoreFlagged(1))
+    graft.CacheRegistry.track(round.cache)
+    kcoreStep(adj, round.state, 65, 1)
   }
 
   /** The full in-flight jaccard composition over the cached layouts

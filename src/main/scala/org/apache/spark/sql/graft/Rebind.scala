@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningC
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 /** Partitioning-preserving rebind for materialized loop state (r20).
   *
@@ -36,12 +37,15 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * outside, does not). So the wrapper (and any query-stage shells)
   * is unwrapped before the partitioning/ordering are read.
   *
-  * The partitioning claim is only made when the unwrapped plan's
+  * The partitioning and ordering are claimed only when the unwrapped
+  * plan is an InMemoryTableScanExec over a MATERIALIZED cache whose
   * output attributes are exactly the analyzed output (no pruning or
-  * renaming in between) — otherwise it degrades to
-  * UnknownPartitioning, which is never wrong, just unoptimized. The
-  * caller must have MATERIALIZED the frame (persist + count) for the
-  * claim to be useful.
+  * renaming in between). Anything else degrades to
+  * UnknownPartitioning and no ordering, which is never wrong, just
+  * unoptimized: the layout of a plan that has not run yet is only
+  * AQE's initial guess (it may coalesce or re-plan its exchanges), and
+  * baking that guess into the LogicalRDD could let a downstream join
+  * skip an Exchange it needs. A loaded cache's layout is fixed.
   *
   * Lives under org.apache.spark.sql because `Dataset.ofRows` and
   * `QueryExecution.toRdd` are private[sql]; no Spark internals are
@@ -76,11 +80,14 @@ object Rebind {
     val qe = ds.queryExecution
     val inner = unwrap(qe.executedPlan)
     val out = qe.analyzed.output
-    val (part, order) =
-      if (inner.output.map(_.exprId) == out.map(_.exprId)) {
-        val raw = inner.outputPartitioning
-        (if (leafCount(raw) <= 8) raw else firstLeaf(raw), inner.outputOrdering)
-      } else (UnknownPartitioning(0), Nil)
+    val (part, order) = inner match {
+      case scan: InMemoryTableScanExec
+          if scan.relation.cacheBuilder.isCachedColumnBuffersLoaded &&
+            scan.output.map(_.exprId) == out.map(_.exprId) =>
+        val raw = scan.outputPartitioning
+        (if (leafCount(raw) <= 8) raw else firstLeaf(raw), scan.outputOrdering)
+      case _ => (UnknownPartitioning(0), Nil)
+    }
     Dataset.ofRows(ds.sparkSession,
       LogicalRDD(out, qe.toRdd, part, order, isStreaming = false)(ds.sparkSession))
   }

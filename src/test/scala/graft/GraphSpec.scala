@@ -8,6 +8,12 @@ import graft.operators.Graph
   * design means there is no tolerance to hide behind. */
 class GraphSpec extends SparkSpec {
 
+  /** Spark jobs of one warm graph_kcore at sf0.001, build and collect:
+    * the edge and degree build, four peel states (each its own shuffle
+    * stages, its cache stage and its noop write) and the sorted
+    * readout of the last state. */
+  private val KcoreJobs = 19
+
   /** (src, dst, w) edge list the pagerank operator derives, rebuilt
     * driver-side from raw events. */
   private def pageEdges(): Map[(Long, Long), Long] = {
@@ -132,22 +138,30 @@ class GraphSpec extends SparkSpec {
     }.toSet
   }
 
-  test("graph_kcore equals the sequential synchronous peel and reaches its fixpoint in 6 rounds") {
-    val edges = partEdges()
-    val adj = (edges.toSeq ++ edges.toSeq.map(_.swap))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+  /** The sequential synchronous peel cut off after `iters` rounds:
+    * (node → round that removed it, 0 if still alive; survivors). */
+  private def sequentialPeel(adj: Map[Long, Set[Long]], iters: Int)
+      : (Map[Long, Long], Set[Long]) = {
     var alive = adj.keySet
     val peel = scala.collection.mutable.Map.empty[Long, Long]
-    for (r <- 1 to 6) {
+    for (r <- 1 to iters) {
       val removed = alive.filter(v => (adj(v) intersect alive).size < 65)
       removed.foreach(v => peel(v) = r.toLong)
       alive = alive -- removed
     }
     alive.foreach(v => peel(v) = 0L)
+    (peel.toMap, alive)
+  }
+
+  test("graph_kcore equals the sequential synchronous peel and reaches its fixpoint in 6 rounds") {
+    val edges = partEdges()
+    val adj = (edges.toSeq ++ edges.toSeq.map(_.swap))
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val (peel, alive) = sequentialPeel(adj, 6)
     val got = Graph.graph_kcore(spark, sf0001).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     CacheRegistry.releaseAll()
-    assert(got == peel.toMap, "distributed k-core peel diverged from sequential replay")
+    assert(got == peel, "distributed k-core peel diverged from sequential replay")
     // the 6-round bound actually suffices at this SF: the surviving
     // set is a true 65-core (one more peel round removes nothing)
     assert(alive.forall(v => (adj(v) intersect alive).size >= 65),
@@ -156,6 +170,42 @@ class GraphSpec extends SparkSpec {
     // and the peel took more than one round (real onion layers)
     assert(peel.values.exists(_ > 1L), "degenerate: peel converged in one round")
     assert(alive.nonEmpty, "degenerate: empty 65-core")
+  }
+
+  test("graph_kcore cut off mid-peel equals the sequential peel cut off at the same round") {
+    // with iters below the fixpoint the last state still flags nodes
+    // that the next round would remove; the peel must label them 0,
+    // exactly like the sequential peel stopped after `iters` rounds
+    val edges = partEdges()
+    val adj = (edges.toSeq ++ edges.toSeq.map(_.swap))
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    for (iters <- Seq(1, 2)) {
+      val (peel, alive) = sequentialPeel(adj, iters)
+      // premise: the cut is really mid-peel — a survivor is still
+      // below k among survivors, so round iters + 1 would remove it
+      assert(alive.exists(v => (adj(v) intersect alive).size < 65),
+        s"premise: the peel already reached its fixpoint after $iters rounds")
+      val got = Graph.graph_kcore(spark, sf0001, iters = iters).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      CacheRegistry.releaseAll()
+      assert(got == peel, s"k-core peel cut off after $iters rounds diverged")
+    }
+  }
+
+  test("a warm graph_kcore runs a pinned number of Spark jobs") {
+    // one materializing job per peel round: a change that adds a job
+    // back to every round (or to the output) moves this count
+    val sc = spark.sparkContext
+    Graph.graph_kcore(spark, sf0001).collect()
+    CacheRegistry.releaseAll()
+    val group = "graph-kcore-job-gate"
+    sc.setJobGroup(group, "one warm graph_kcore")
+    try Graph.graph_kcore(spark, sf0001).collect()
+    finally sc.clearJobGroup()
+    CacheRegistry.releaseAll()
+    org.apache.spark.ListenerBusDrain(sc)
+    val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+    assert(jobs == KcoreJobs, s"a warm graph_kcore ran $jobs Spark jobs, pinned at $KcoreJobs")
   }
 
   test("graph_jaccard_links equals brute-force common-neighbor Jaccard on non-edges") {
@@ -569,6 +619,54 @@ class GraphSpec extends SparkSpec {
       assert(!plan.contains("Exchange"),
         s"node-keyed aggregate over the rebound state still shuffles:\n$plan")
     } finally df.unpersist(blocking = true)
+
+    // the claim needs a LOADED cache: a frame that has not run (here
+    // with its Exchange still to execute), or a cache not yet filled,
+    // degrades to UnknownPartitioning and its aggregate shuffles again
+    import org.apache.spark.sql.functions.{count, lit}
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, UnknownPartitioning}
+    import org.apache.spark.sql.execution.LogicalRDD
+    def claimed(rebound: org.apache.spark.sql.DataFrame): Partitioning =
+      rebound.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.outputPartitioning }.get
+    val raw = spark.range(0L, 1000L).selectExpr("id % 37 AS k", "id AS v").repartition($"k")
+    val unrun = org.apache.spark.sql.graft.Rebind.preserving(raw)
+    assert(claimed(unrun).isInstanceOf[UnknownPartitioning])
+    assert(unrun.groupBy($"k").count().queryExecution.executedPlan.toString.contains("Exchange"))
+    val unfilled = raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try assert(claimed(org.apache.spark.sql.graft.Rebind.preserving(unfilled))
+      .isInstanceOf[UnknownPartitioning])
+    finally unfilled.unpersist(blocking = true)
+
+    // the superstep round helper hands back a rebound state that keeps
+    // the round's hash(node) layout, and the next k-core round over it
+    // (decrement aggregate + state join) runs with no shuffle
+    val e0 = Graph.partEdges(spark, sf0001)
+    val adj = e0.select($"u".as("node"), $"v".as("nbr"))
+      .union(e0.select($"v".as("node"), $"u".as("nbr")))
+      .repartition($"node")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      adj.count()
+      val round = Graph.materializeRound(
+        Graph.kcoreInit(adj.groupBy($"node").agg(count(lit(1)).as("deg")), 65),
+        Graph.kcoreFlagged(1))
+      try {
+        claimed(round.state) match {
+          case h: HashPartitioning =>
+            assert(h.expressions.map(_.sql) == Seq("node"), s"state partitioned by $h")
+          case other => fail(s"round state lost its hash(node) layout: $other")
+        }
+        assert(round.n > 0, "premise: round 0 flags nodes for removal")
+        val next = Graph.kcoreStep(adj, round.state, 65, 1)
+        next.collect()
+        val shuffles = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+          .collect(next.queryExecution.executedPlan) {
+            case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+          }
+        assert(shuffles.isEmpty,
+          s"the next k-core round shuffles:\n${next.queryExecution.executedPlan}")
+      } finally round.cache.unpersist(blocking = true)
+    } finally adj.unpersist(blocking = true)
   }
 
   test("r19 aligned bucketed writes land one file per bucket") {
