@@ -401,8 +401,13 @@ object Graph {
     * does not matter. Two explodes and a filter compile into the
     * stage's generated code, where the flatten(transform(slice(…)))
     * lambdas this replaced ran interpreted; every caller bounds the
-    * array size, so the |arr|² candidates before the filter stay
-    * small. */
+    * array size (≤ 7 lines per order, ≤ 32 per jaccard fan), so the
+    * |arr|² candidates before the filter, against C(|arr|, 2) for the
+    * lambdas, stay small. Against the lambda form at sf0.01 on 4
+    * vCPUs, where most jaccard fans reach the cap (warm CPU per
+    * query, median of 10 alternating runs): graph_jaccard_index 3.23
+    * → 2.89 s (lower in 9/10), graph_label_prop 2.59 → 2.33 s (lower
+    * in 7/10), graph_jaccard_links level (4.15 → 4.18 s). */
   private def arrayPairs(df: DataFrame, arr: String): DataFrame =
     df.select(explode(col(arr)).as("u"), col(arr))
       .select(col("u"), explode(col(arr)).as("v"))
@@ -894,10 +899,11 @@ object Graph {
     // hub never materializes its raw degree; groupBy(node) rides the
     // window's partitioning, no new Exchange) and its u < v pairs
     // ([[arrayPairs]]; a node's neighbors are distinct) are the join's
-    // a.nbr < b.nbr. Measured at sf0.1/32t: 3.1–3.8 → 2.3–2.6 s,
-    // identical top-100 (r18 scratch probe; the persist-the-centers
-    // variant was SLOWER — the cache write costs more than the second
-    // window it saves).
+    // a.nbr < b.nbr. Against the self-join, the array form (measured
+    // with the nested-lambda pair explode [[arrayPairs]] replaced) took
+    // 2.3–2.6 s against 3.1–3.8 s at sf0.1/32t, identical top-100; the
+    // persist-the-centers variant was SLOWER (the cache write costs
+    // more than the second window it saves).
     val fans = centers.groupBy($"node").agg(collect_list($"nbr").as("ns"))
     val common = arrayPairs(fans, "ns")
       .groupBy($"u", $"v")

@@ -69,18 +69,15 @@ private[graft] object IndexUtil {
     * write task holds exactly one bucket's rows and writes exactly
     * one file: N generations × B files in, B files out, one sorted
     * run per bucket, no Exchange anywhere (data never changes
-    * buckets; compaction only changes FILES). The write's scan must
-    * be FORCED bucketed: AQE's auto-bucketed-scan
+    * buckets; compaction only changes FILES). The scan must be
+    * FORCED bucketed for the duration: AQE's auto-bucketed-scan
     * demotes a bucketed read to plain size-split files when no
     * operator exploits the partitioning — correct for queries, wrong
     * here, where the partitioning IS the point (and it also defeats a
     * `repartition(buckets, bucketCols)` workaround: the optimizer
     * elides the repartition as satisfied by the nominal scan
     * partitioning, then the demotion un-satisfies it — measured,
-    * 13 mixed-bucket files from 4 size-split tasks). Only the write
-    * is forced (`forceBucketedScan`): the read-back of the new
-    * generation's totals keeps the size-split scan, which needs no
-    * bucket layout and runs fewer tasks than one per bucket.
+    * 13 mixed-bucket files from 4 size-split tasks).
     * The result is written and FINGERPRINT-VERIFIED through
     * [[writeVerifiedGeneration]] before the swap — compaction must be
     * invisible to every query; the fragmented table drops only on a
@@ -91,8 +88,15 @@ private[graft] object IndexUtil {
   def compactTable(s: SparkSession, frag: String, compacted: String,
       buckets: Int, bucketCols: Seq[String], sortCols: Seq[String],
       rewrite: DataFrame => DataFrame = identity): Unit = {
-    writeVerifiedGeneration(s.table(frag), compacted, buckets, bucketCols,
-      sortCols, "compacted", rewrite, forceBucketedScan = true)
+    val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    val prevAuto = s.conf.getOption(autoKey)
+    s.conf.set(autoKey, "false")
+    try writeVerifiedGeneration(s.table(frag), compacted, buckets, bucketCols,
+      sortCols, "compacted", rewrite)
+    finally prevAuto match {
+      case Some(v) => s.conf.set(autoKey, v)
+      case None => s.conf.unset(autoKey)
+    }
     dropIndexTable(s, frag) // commit point: compacted is live
   }
 
@@ -115,33 +119,19 @@ private[graft] object IndexUtil {
     * caller's commit point (dropping the old generation) is never
     * reached. `rewrite` is a fault-injection seam for specs: it sees
     * the rows after they are observed and before they are written
-    * (identity in every real caller). `forceBucketedScan` turns
-    * AQE's auto-bucketed-scan off while the write is planned, and
-    * only then (see [[compactTable]]). */
+    * (identity in every real caller). */
   def writeVerifiedGeneration(rows: DataFrame, tbl: String, buckets: Int,
       bucketCols: Seq[String], sortCols: Seq[String], what: String,
-      rewrite: DataFrame => DataFrame = identity,
-      forceBucketedScan: Boolean = false): Unit = {
+      rewrite: DataFrame => DataFrame = identity): Unit = {
     val s = rows.sparkSession
     dropIndexTable(s, tbl)
     val totals = fingerprintTotals(rows)
     val obs = Observation()
-    val writer = rewrite(rows.observe(obs, totals.head, totals.tail: _*))
+    rewrite(rows.observe(obs, totals.head, totals.tail: _*))
       .write.mode("overwrite")
       .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(sortCols.head, sortCols.tail: _*)
-      .format("parquet")
-    if (!forceBucketedScan) writer.saveAsTable(tbl)
-    else {
-      val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-      val prevAuto = s.conf.getOption(autoKey)
-      s.conf.set(autoKey, "false")
-      try writer.saveAsTable(tbl)
-      finally prevAuto match {
-        case Some(v) => s.conf.set(autoKey, v)
-        case None => s.conf.unset(autoKey)
-      }
-    }
+      .format("parquet").saveAsTable(tbl)
     val written = observed(obs, tbl)
     val target = s.table(tbl)
     if (target.select(fingerprintTotals(target): _*).head().toSeq != written.toSeq) {
