@@ -957,9 +957,9 @@ object Dedup {
     * identity); the hooked frontier is persisted per round (it feeds
     * both the jump lookup and the jump probe — unpersisted, the
     * self-join would recompute the hook twice) and the previous round
-    * unpersisted, so lineage never re-executes. The per-round
-    * convergence check rides the materializing action as an observe
-    * metric.
+    * unpersisted, so lineage never re-executes. Each round is one
+    * [[Superstep.iterate]] round: the write that fills the frontier
+    * cache also counts the labels that changed.
     *
     * If `maxIter` is exhausted before convergence the result would
     * contain SPLIT components, so the loop fails loudly rather than
@@ -978,26 +978,11 @@ object Dedup {
     val fwd = pairs.select(col(a).as("src"), col(b).as("dst"))
     val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    // Every in-flight round persist is tracked here and reclaimed by
-    // the finally if an exception escapes mid-loop (a failed action
-    // would otherwise leave hooked/frontier MEMORY_AND_DISK entries
-    // behind for the life of the session — CacheManager holds strong
-    // refs). On success the final frontier is handed to CacheRegistry
-    // and everything else has already been unpersisted round-by-round.
-    val inFlight = scala.collection.mutable.Set[DataFrame]()
-    def persistRound(df: DataFrame): DataFrame = {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK); inFlight += p; p
-    }
-    def dropRound(df: DataFrame): Unit = {
-      df.unpersist(blocking = false); inFlight -= df
-    }
-    var ok = false
+    // the round's persisted hook, released once the next round's state
+    // is filled (the step after it) or when the loop exits
+    var hooked: Option[DataFrame] = None
+    val t0 = System.nanoTime()
     try {
-      // Initial frontier = the FIRST propagation round computed without
-      // a join: with identity labels, round 1's neighbor-min is just
-      // min(dst) per src, so label₀ = least(node, min neighbor) comes
-      // straight off the edge list — one aggregation replaces the
-      // identity init PLUS a full join round.
       // Materialize `edges` BEFORE anything consumes it: the round-1
       // job otherwise contains several independent branches (initial
       // frontier, neighbor-min, hook) that all scan the still-lazy
@@ -1006,85 +991,50 @@ object Dedup {
       // scale) before any partition lands in cache. One count pays the
       // lineage exactly once.
       edges.count()
-      var labels = persistRound(edges.groupBy(col("src"))
+      // Initial frontier = the FIRST propagation round computed without
+      // a join: with identity labels, round 1's neighbor-min is just
+      // min(dst) per src, so label₀ = least(node, min neighbor) comes
+      // straight off the edge list — one aggregation replaces the
+      // identity init PLUS a full join round.
+      val init = edges.groupBy(col("src"))
         .agg(least(col("src"), min(col("dst"))).as("label"))
-        .select(col("src").as("node"), col("label")))
-      // same reasoning: the hook reads `labels` from two sides
-      labels.count()
-      var changed = 1L
-      var i = 0
-      // the round's materialized cache entry (the `labels` var itself
-      // is rebound to a plain LogicalRDD view of it — see below)
-      var prevCached: Option[DataFrame] = None
-      while (changed > 0 && i < maxIter) {
-        val roundT0 = System.nanoTime()
+        .select(col("src").as("node"), col("label"))
+      val last = Superstep.iterate(init, count(lit(1)), maxIter) { (state, _) =>
+        hooked.foreach(_.unpersist(blocking = false))
+        val labels = state.select(col("node"), col("label"))
         val nbrMin = edges.join(labels, edges("dst") === labels("node"))
           .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
-        val prev = labels
         // HOOK: take the min of own and neighbors' labels. Persisted:
         // the jump below reads it from two sides.
-        val hooked = persistRound(
-          prev.join(nbrMin, prev("node") === nbrMin("src"), "left")
-            .select(prev("node"), prev("label").as("old"),
-              least(prev("label"), coalesce(col("nlabel"), prev("label"))).as("lab")))
+        val hook = labels.join(nbrMin, labels("node") === nbrMin("src"), "left")
+          .select(labels("node"), labels("label").as("old"),
+            least(labels("label"), coalesce(col("nlabel"), labels("label"))).as("lab"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        hooked = Some(hook)
         // JUMP (pointer doubling): label := label's label. Labels only
         // decrease and always name a node of the same component, so the
         // shortcut is safe and strictly accelerating.
-        val lut = hooked.select(col("node").as("jnode"), col("lab").as("jlab"))
-        // The convergence check rides the SAME action that materializes
-        // the new frontier: the round persists (node, old, label) and
-        // the materializing action IS the changed-count aggregate over
-        // it — one job populates the cache and returns the count, with
-        // no second frontier-vs-frontier join and no `Observation`
-        // (whose .get blocks on the async listener bus — measured at
-        // a large fraction of each round's wall time on small rounds).
-        val upd = hooked.join(lut, hooked("lab") === col("jnode"), "left")
-          .select(hooked("node"), hooked("old"),
-            least(hooked("lab"), coalesce(col("jlab"), hooked("lab"))).as("label"))
-        val cached = persistRound(upd)
-        changed = cached
-          .agg(sum(when(col("label") =!= col("old"), 1L).otherwise(0L)))
-          .collect()(0) match {
-            case r if r.isNullAt(0) => 0L
-            case r => r.getLong(0)
-          }
-        // Rebind the frontier to its MATERIALIZED rows (LogicalRDD):
-        // the jump self-join otherwise doubles the logical-plan TREE
-        // every round — RDD lineage is a shared DAG, but plan trees
-        // are not, and by round ~10 plan stringification alone OOMs.
-        // r20: partitioning-preserving rebind (Rebind.preserving — no
-        // InternalRow→Row→InternalRow round-trip, and the hash(node)
-        // layout of the round cache survives into the next round's
-        // joins; see Graph.rebind).
-        labels = org.apache.spark.sql.graft.Rebind.preserving(cached)
-          .select(col("node"), col("label"))
-        dropRound(hooked)
-        dropRound(prev)
-        prevCached.foreach(dropRound)
-        prevCached = Some(cached)
-        i += 1
-        // round visibility: at corpus scale an operator watches round
-        // progress/convergence here instead of a silent multi-hour job
-        System.err.println(f"[graft:cc] round $i changed=$changed " +
-          f"${(System.nanoTime() - roundT0) / 1e9}%.2f s")
+        val lut = hook.select(col("node").as("jnode"), col("lab").as("jlab"))
+        val upd = hook.join(lut, hook("lab") === col("jnode"), "left")
+          .select(hook("node"), hook("old"),
+            least(hook("lab"), coalesce(col("jlab"), hook("lab"))).as("label"))
+        (upd, sum(when(col("label") =!= col("old"), 1L).otherwise(0L)))
       }
-      if (changed > 0)
-        // in-flight persists (incl. the last frontier) are reclaimed
-        // by the finally below — ok stays false
+      if (last.n > 0) {
+        last.cache.unpersist(blocking = false)
         throw new IllegalStateException(
           s"connectedComponents did not converge in $maxIter rounds " +
-            s"($changed labels still changing) — labels would be split; " +
+            s"(${last.n} labels still changing) — labels would be split; " +
             "with pointer jumping this means a genuine defect, not depth")
-      // the returned view reads from the final round's cache entry;
-      // register THAT entry so releaseAll frees it
-      prevCached.foreach(CacheRegistry.track)
-      ok = true
-      labels
-    } finally {
-      edges.unpersist(blocking = false)
-      if (!ok) inFlight.foreach { df =>
-        try df.unpersist(blocking = false) catch { case _: Throwable => () }
       }
+      // at corpus scale an operator sees the loop's round count and
+      // time here instead of a silent multi-hour job
+      System.err.println(f"[graft:cc] ${last.r} rounds " +
+        f"${(System.nanoTime() - t0) / 1e9}%.2f s")
+      last.state.select(col("node"), col("label"))
+    } finally {
+      hooked.foreach(_.unpersist(blocking = false))
+      edges.unpersist(blocking = false)
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -22,43 +22,6 @@ import org.apache.spark.storage.StorageLevel
   * sum exact integers, never average doubles.
   */
 object Graph {
-
-  /** One materialized superstep round: the persisted round `cache`
-    * (the caller unpersists or tracks it), its partitioning-preserving
-    * rebind `state` (the next round's input) and the round's
-    * convergence count `n`. */
-  private[graft] final case class Round(cache: DataFrame, state: DataFrame, n: Long)
-
-  /** Materialize one superstep round in ONE action. `df` is persisted,
-    * and a single `noop` write over the cached frame fills the cache
-    * while an `Observation` of `agg` (a Long-valued aggregate, null →
-    * 0; read through [[IndexUtil.observed]]) counts the round's
-    * convergence figure in the write's own stage: the round pays the
-    * cache stage and that one stage, with no partial and final
-    * aggregate jobs to bring one Long back. The state
-    * comes back already rebound, so [[rebind]] only ever sees a
-    * materialized cache; rebinding keeps the logical plan
-    * constant-size over any round count and the cache's hash
-    * partitioning visible to the next round's node-keyed join. */
-  private[graft] def materializeRound(df: DataFrame, agg: Column): Round = {
-    val cache = df.persist(StorageLevel.MEMORY_AND_DISK)
-    val obs = Observation()
-    cache.observe(obs, coalesce(agg, lit(0L)).as("n"))
-      .write.format("noop").mode("overwrite").save()
-    val n = IndexUtil.observed(obs, "superstep round").getLong(0)
-    Round(cache, rebind(cache), n)
-  }
-
-  /** Partitioning-preserving rebind (see
-    * [[org.apache.spark.sql.graft.Rebind]]): a LogicalRDD over the
-    * cached rows that keeps their hash partitioning and ordering, so
-    * the next round's node-keyed join or aggregate does not
-    * re-Exchange the state. Rebind claims that layout only for a
-    * materialized cache and degrades to UnknownPartitioning otherwise;
-    * the loops get their rebound state from [[materializeRound]], and
-    * the one-shot outputs rebind after their own `count()`. */
-  private def rebind(cached: DataFrame): DataFrame =
-    org.apache.spark.sql.graft.Rebind.preserving(cached)
 
   /** PAGERANK over the page-transition graph the event log implies —
     * the graph-centrality quality signal web-scale curation pipelines
@@ -97,24 +60,18 @@ object Graph {
     * iteration count. */
   def graph_pagerank(s: SparkSession, d: String, iters: Int = 8): DataFrame = {
     import s.implicits._
-    val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-    val ev = Tables.events(s, d)
-      .select($"user_id", $"ts", $"event_id",
-        get_json_object($"props", "$.k").cast("long").as("page"))
-    // r19: the superstep join key is src, but the groupBy above leaves
-    // the cached edges hash-partitioned on (src, dst) — which does NOT
-    // satisfy a join on src, so every one of the 8 rounds re-Exchanged
-    // (and re-sorted) the corpus-scale edge table. One repartition +
-    // sortWithinPartitions on src at build time makes the cached
-    // partitioning/ordering exactly what the per-round SortMergeJoin
-    // needs: the edge side joins Exchange-free and sort-free all 8
-    // rounds, only the node-sized rank state moves (guide §2.4 —
-    // "two operations keyed the same way share one exchange"; the
-    // same layout the bucketed index twin gets at write time).
-    val edges = ev.withColumn("next_page", lead($"page", 1).over(w))
-      .filter($"next_page".isNotNull && $"next_page" =!= $"page")
-      .groupBy($"page".as("src"), $"next_page".as("dst"))
-      .agg(count(lit(1)).as("w"))
+    // r19: the superstep join key is src, but the groupBy of the edge
+    // derivation leaves the edges hash-partitioned on (src, dst) —
+    // which does NOT satisfy a join on src, so every one of the 8
+    // rounds re-Exchanged (and re-sorted) the corpus-scale edge table.
+    // One repartition + sortWithinPartitions on src at build time makes
+    // the cached partitioning/ordering exactly what the per-round
+    // SortMergeJoin needs: the edge side joins Exchange-free and
+    // sort-free all 8 rounds, only the node-sized rank state moves
+    // (guide §2.4 — "two operations keyed the same way share one
+    // exchange"; the same layout the bucketed index twin gets at
+    // write time).
+    val edges = pageEdges(s, d)
       .repartition($"src").sortWithinPartitions($"src")
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -124,53 +81,13 @@ object Graph {
       val outW = edges.groupBy($"src").agg(sum($"w").as("out_w"))
         .sortWithinPartitions($"src")
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val nodes = edges.select($"src".as("node"))
-        .union(edges.select($"dst".as("node"))).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        // the one driver scalar: N for the teleport term (loop-invariant)
-        val n = nodes.count()
-        // r19: the DANGLING SET (nodes with no out-edges) is a loop
-        // invariant — only its rank MASS changes per round. Flag it
-        // once on the rank state; each round's dangling term is then
-        // a filter + 1-row aggregate over the state instead of a
-        // ranks-vs-srcs anti-join (at scale: one fewer Exchange+sort
-        // of the node-sized state per round, 8 rounds).
-        var round = materializeRound(
-          nodes.withColumn("rank", lit(1000000000L))
-            .join(outW.select($"src".as("node"), lit(true).as("has_out")),
-              Seq("node"), "left")
-            .select($"node", $"rank", coalesce($"has_out", lit(false)).as("has_out")),
-          count(lit(1)))
-        // r17 superstep fold: the round's LEFT side is the previous
-        // rank state itself (same node set as `nodes` — a loop
-        // invariant), so the old rank rides the round for free and the
-        // materializing action doubles as a FIXPOINT check (integer
-        // pagerank is a deterministic function of the rank table, so
-        // round i ≡ round i−1 implies every remaining round is
-        // identical — the lpaLoop argument; the oracle still unrolls
-        // all `iters` rounds and agreement proves any skip was sound).
-        var r = 1
-        var converged = false
-        while (r <= iters && !converged) {
-          val ranks = round.state
-          val inflow = edges
-            .join(ranks, edges("src") === ranks("node"))
-            .join(outW, Seq("src"))
-            .select($"dst", expr("rank * w div out_w").as("contrib"))
-            .groupBy($"dst").agg(sum($"contrib").as("inflow"))
-          val nextRound = materializeRound(rankRound(ranks, inflow, n),
-            sum(when($"rank" =!= $"old", lit(1L)).otherwise(lit(0L))))
-          converged = nextRound.n == 0
-          round.cache.unpersist(blocking = false)
-          round = nextRound
-          r += 1
-        }
-        // the last round's state IS the result: its cache stays
-        // tracked until the consumer's releaseAll
-        graft.CacheRegistry.track(round.cache)
-        round.state.select($"node".as("page"), $"rank")
-          .orderBy($"rank".desc, $"page")
+      val nodes = pageNodes(edges).persist(StorageLevel.MEMORY_AND_DISK)
+      try pagerankLoop(nodes, outW.select($"src".as("node")), iters) { ranks =>
+        edges
+          .join(ranks, edges("src") === ranks("node"))
+          .join(outW, Seq("src"))
+          .select($"dst", expr("rank * w div out_w").as("contrib"))
+          .groupBy($"dst").agg(sum($"contrib").as("inflow"))
       } finally {
         outW.unpersist(blocking = false)
         nodes.unpersist(blocking = false)
@@ -178,11 +95,55 @@ object Graph {
     } finally edges.unpersist(blocking = false)
   }
 
+  /** Every endpoint of a (src, dst) edge frame, as one `node` column. */
+  private def pageNodes(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("node"))
+      .union(edges.select(col("dst").as("node"))).distinct()
+
+  /** The pagerank superstep loop, shared by [[graph_pagerank]] and
+    * [[pagerankOverIndex]]: they differ only in where the node set, the
+    * nodes with out-edges (`srcs`, one `node` column) and each round's
+    * `inflow` (rank state → (dst, inflow)) come from. The node count
+    * is the one driver scalar (the teleport term's N).
+    *
+    * r17 superstep fold: the round's LEFT side is the previous rank
+    * state itself (same node set — a loop invariant), so the old rank
+    * rides the round for free and the materializing action doubles as
+    * a FIXPOINT check (integer pagerank is a deterministic function of
+    * the rank table, so round i ≡ round i−1 implies every remaining
+    * round is identical — the lpaLoop argument; the oracle still
+    * unrolls all `iters` rounds and agreement proves any skip was
+    * sound). */
+  private def pagerankLoop(nodes: DataFrame, srcs: DataFrame, iters: Int)(
+      inflow: DataFrame => DataFrame): DataFrame = {
+    import nodes.sparkSession.implicits._
+    val n = nodes.count()
+    Superstep.iterate(pagerankInit(nodes, srcs), count(lit(1)), iters) { (ranks, _) =>
+      (rankRound(ranks, inflow(ranks), n),
+        sum(when($"rank" =!= $"old", lit(1L)).otherwise(lit(0L))))
+    }.state.select($"node".as("page"), $"rank")
+      .orderBy($"rank".desc, $"page")
+  }
+
+  /** Round-0 rank state (node, rank, has_out): every node at 10^9.
+    * r19: the DANGLING SET (nodes with no out-edges) is a loop
+    * invariant — only its rank MASS changes per round. Flag it once on
+    * the state; each round's dangling term is then a filter + 1-row
+    * aggregate over the state instead of a ranks-vs-srcs anti-join (at
+    * scale: one fewer Exchange+sort of the node-sized state per
+    * round). */
+  private def pagerankInit(nodes: DataFrame, srcs: DataFrame): DataFrame = {
+    import nodes.sparkSession.implicits._
+    nodes.withColumn("rank", lit(1000000000L))
+      .join(srcs.select($"node", lit(true).as("has_out")), Seq("node"), "left")
+      .select($"node", $"rank", coalesce($"has_out", lit(false)).as("has_out"))
+  }
+
   /** One pagerank update over the rank state and the round's inflow:
     * the teleport term plus the damped inflow and the dangling mass
     * spread over all `n` nodes. The previous rank rides along as
     * `old`, so the materializing action doubles as the fixpoint
-    * count. Shared by [[graph_pagerank]] and [[pagerankOverIndex]]. */
+    * count. */
   private def rankRound(ranks: DataFrame, inflow: DataFrame, n: Long): DataFrame = {
     import ranks.sparkSession.implicits._
     val dangling = ranks.filter(!$"has_out")
@@ -244,12 +205,7 @@ object Graph {
       // (the same reason the superstep loops' round ≥1 plans already
       // did — they always plan post-materialization).
       ed.count()
-      val out = trianglesBody(ed)
-      val rows = out.persist(StorageLevel.MEMORY_AND_DISK)
-      rows.count()
-      graft.CacheRegistry.track(rows)
-      rows.sparkSession.createDataFrame(rows.rdd, rows.schema)
-        .orderBy($"s_suppkey")
+      Superstep.output(trianglesBody(ed)).orderBy($"s_suppkey")
     } finally ed.unpersist(blocking = false)
   }
 
@@ -278,9 +234,8 @@ object Graph {
   }
 
   /** Wedge enumeration + closure + per-node readout over a caller-
-    * managed oriented edge frame — the shared back half of
-    * [[graph_triangles]] and the r19 plan handle
-    * [[trianglesInflightPlan]].
+    * managed oriented edge frame — the back half of
+    * [[graph_triangles]].
     *
     * SHUFFLE_HASH pins on both joins (r19 — the trianglesIndexPlan
     * lesson applied to the in-flight form, which had been left on
@@ -330,44 +285,6 @@ object Graph {
       .orderBy($"s_suppkey")
   }
 
-  /** The full in-flight triangles composition over the SAME cached
-    * layout [[graph_triangles]] builds, pre-materialization — the r19
-    * plan-capture handle (the registered query materializes its
-    * result, so its final explain is a LogicalRDD scan). Input cache
-    * is CacheRegistry-tracked; callers release after explaining. */
-  private[graft] def trianglesInflightPlan(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val ed = graft.CacheRegistry.cache(
-      orientedCoSupplierEdges(s, d).repartition($"src"))
-    // r20: materialize before composing, exactly like the registered
-    // query — the r19 dump planned against an unmaterialized cache and
-    // showed ENSURE_REQUIREMENTS Exchanges the production query no
-    // longer pays (r19 verdict, What's wrong #1).
-    ed.count()
-    trianglesBody(ed)
-  }
-
-  /** LABEL-PROPAGATION COMMUNITIES (synchronous LPA, Raghavan et al.
-    * 2007 — public literature) on the co-supplier graph
-    * [[graph_triangles]] builds: every node starts labeled with its
-    * own id, and each round adopts the most frequent label among its
-    * neighbors (ties → smallest label). A FIXED round count with a
-    * deterministic tie-break replaces LPA's usual
-    * random-order/async convergence — synchronous sweeps can
-    * oscillate on bipartite structure, but determinism is what a
-    * verifiable engine needs, and k rounds bound label diameter at k
-    * hops, which is the communities' working definition here.
-    *
-    * Spark-first shape: the adjacency (both directions of the
-    * oriented edge list) persists once and every round is ONE
-    * equi-join (adj ⋈ labels on the neighbor) + a count aggregate +
-    * a per-node argmax window — the same join-per-superstep shape as
-    * [[graph_pagerank]], with the same LogicalRDD rebind keeping the
-    * plan constant-size. Votes are exact integer counts and the
-    * argmax ordering is total ((cnt DESC, label ASC)), so all 6
-    * rounds replay bit-exactly in DuckDB's unrolled materialized CTE
-    * chain. Driver state: the loop index only — labels never leave
-    * the cluster. */
   /** The co-supplier support-≥2 edge list (u < v) — the shared
     * substrate of [[graph_label_prop]], [[graph_modularity]],
     * [[graph_triangles]] and [[graph_bfs_layers]]. Caller manages
@@ -414,58 +331,84 @@ object Graph {
       .filter(col("u") < col("v"))
 
   /** The LPA superstep loop over a caller-persisted adjacency:
-    * returns the materialized, cache-tracked (node, label) table.
-    * Shared by [[graph_label_prop]] and [[graph_modularity]] so the
-    * modularity report doesn't pay the edge derivation twice. */
+    * returns the last round's rebound, cache-tracked label state
+    * (node, label, …). Shared by [[graph_label_prop]],
+    * [[graph_lpa_index]] and [[graph_modularity]] so the modularity
+    * report doesn't pay the edge derivation twice. */
   private def lpaLoop(adj: DataFrame, iters: Int,
       mergeHint: Boolean = false): DataFrame = {
     import adj.sparkSession.implicits._
     // hint scoped to the join side only — hinting the whole frame
-    // would warn on the non-join uses (the initial distinct) and
-    // force SMJ for the in-flight callers too. SMJ, not SHJ, is the
-    // right pin for THESE supersteps (measured r16: shuffle_hash on
-    // the state side ran 3.5 vs 3.1 s steady at sf0.1): the per-round
-    // sort of the EDGE-sized adjacency is cheap next to rebuilding a
-    // hash table per round, unlike the triangles closure whose
-    // streamed side is the O(E^1.5) wedge INTERMEDIATE — there the
-    // sort dominates and shuffle_hash wins 2x (see
+    // would warn on the non-join uses (the initial distinct). SMJ, not
+    // SHJ, is the right pin for THESE supersteps (measured r16:
+    // shuffle_hash on the state side ran 3.5 vs 3.1 s steady at
+    // sf0.1): the per-round sort of the EDGE-sized adjacency is cheap
+    // next to rebuilding a hash table per round, unlike the triangles
+    // closure whose streamed side is the O(E^1.5) wedge INTERMEDIATE —
+    // there the sort dominates and shuffle_hash wins 2x (see
     // trianglesIndexPlan).
     val joinSide = if (mergeHint) adj.hint("merge") else adj
-    var round = materializeRound(
-      adj.select($"node").distinct().withColumn("label", $"node"), count(lit(1)))
-    var i = 1
-    var converged = false
-    while (i <= iters && !converged) {
-      val labels = round.state.select($"node", $"label")
-      val votes = joinSide
-        .join(labels.select($"node".as("nbr"), $"label"), "nbr")
-        .groupBy($"node", $"label").agg(count(lit(1)).as("cnt"))
+    Superstep.iterate(lpaInit(adj), count(lit(1)), iters) { (state, _) =>
+      val labels = state.select($"node", $"label")
       // argmax under the total order (cnt DESC, label ASC) as a
       // max_by over struct(cnt, -label) — same winner as the
       // row_number window (the order is total, so argmax is unique)
       // but an AGGREGATE: map-side partials, no per-node sort.
       // The previous round's label rides along so the materializing
-      // action doubles as the fixpoint check (see below) — one job
-      // per superstep, not a count() plus a convergence join job.
-      val next = votes
+      // action doubles as the fixpoint check — synchronous LPA is a
+      // deterministic function of the label table, so round i ≡ round
+      // i−1 implies every remaining round is identical. The oracle
+      // still unrolls all `iters` rounds — agreement proves the skip
+      // was sound.
+      val next = lpaVotes(joinSide, labels)
         .groupBy($"node")
         .agg(max_by($"label", struct($"cnt", -$"label")).as("label"))
         .join(labels.withColumnRenamed("label", "old"), Seq("node"))
-      // fixpoint short-circuit — synchronous LPA is a deterministic
-      // function of the label table, so round i ≡ round i−1 implies
-      // every remaining round is identical. The oracle still unrolls
-      // all `iters` rounds — agreement proves the skip was sound.
-      val nextRound = materializeRound(next,
-        sum(when($"label" =!= $"old", 1L).otherwise(0L)))
-      converged = nextRound.n == 0
-      round.cache.unpersist(blocking = false)
-      round = nextRound
-      i += 1
-    }
-    graft.CacheRegistry.track(round.cache)
-    round.state.select($"node", $"label")
+      (next, sum(when($"label" =!= $"old", 1L).otherwise(0L)))
+    }.state
   }
 
+  /** Round-0 LPA state: every adjacency node labeled with its own id. */
+  private def lpaInit(adj: DataFrame): DataFrame =
+    adj.select(col("node")).distinct().withColumn("label", col("node"))
+
+  /** One round's vote counts (node, label, cnt): each node's neighbors'
+    * labels, counted — one adjacency ⋈ labels equi-join on the
+    * neighbor plus a count aggregate. */
+  private def lpaVotes(adj: DataFrame, labels: DataFrame): DataFrame =
+    adj.join(labels.select(col("node").as("nbr"), col("label")), "nbr")
+      .groupBy(col("node"), col("label")).agg(count(lit(1)).as("cnt"))
+
+  /** The (s_suppkey, community, community_size) readout of an LPA
+    * label state. */
+  private def communities(labels: DataFrame): DataFrame = {
+    import labels.sparkSession.implicits._
+    labels.select($"node".as("s_suppkey"), $"label".as("community"),
+        count(lit(1)).over(Window.partitionBy($"label")).as("community_size"))
+      .orderBy($"s_suppkey")
+  }
+
+  /** LABEL-PROPAGATION COMMUNITIES (synchronous LPA, Raghavan et al.
+    * 2007 — public literature) on the co-supplier graph
+    * [[graph_triangles]] builds: every node starts labeled with its
+    * own id, and each round adopts the most frequent label among its
+    * neighbors (ties → smallest label). A FIXED round count with a
+    * deterministic tie-break replaces LPA's usual
+    * random-order/async convergence — synchronous sweeps can
+    * oscillate on bipartite structure, but determinism is what a
+    * verifiable engine needs, and k rounds bound label diameter at k
+    * hops, which is the communities' working definition here.
+    *
+    * Spark-first shape: the adjacency (both directions of the
+    * oriented edge list) persists once and every round is ONE
+    * equi-join (adj ⋈ labels on the neighbor) + a count aggregate +
+    * a per-node argmax window — the same join-per-superstep shape as
+    * [[graph_pagerank]], with the same LogicalRDD rebind keeping the
+    * plan constant-size. Votes are exact integer counts and the
+    * argmax ordering is total ((cnt DESC, label ASC)), so all 6
+    * rounds replay bit-exactly in DuckDB's unrolled materialized CTE
+    * chain. Driver state: the loop index only — labels never leave
+    * the cluster. */
   def graph_label_prop(s: SparkSession, d: String, iters: Int = 6): DataFrame = {
     import s.implicits._
     val e0 = coSupplierEdges(s, d)
@@ -478,18 +421,8 @@ object Graph {
       .union(e0.select($"v".as("node"), $"u".as("nbr")))
       .repartition($"nbr").sortWithinPartitions($"nbr")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val labels = lpaLoop(adj, iters)
-      val out = labels
-        .withColumn("community_size",
-          count(lit(1)).over(Window.partitionBy($"label")))
-        .select($"node".as("s_suppkey"), $"label".as("community"),
-          $"community_size")
-      val rows = out.persist(StorageLevel.MEMORY_AND_DISK)
-      rows.count()
-      graft.CacheRegistry.track(rows)
-      rebind(rows).orderBy($"s_suppkey")
-    } finally adj.unpersist(blocking = false)
+    try communities(lpaLoop(adj, iters))
+    finally adj.unpersist(blocking = false)
   }
 
   /** MULTI-SOURCE BFS with seed attribution — the hub-assignment
@@ -530,8 +463,8 @@ object Graph {
   /** The BFS relaxation loop over a caller-provided adjacency —
     * shared by [[graph_bfs_layers]] (in-flight derivation) and
     * [[graph_bfs_index]] (persisted adjacency index), the lpaLoop
-    * factoring applied to BFS. Returns the materialized
-    * (s_suppkey, dist, seed) result. */
+    * factoring applied to BFS. Returns the (s_suppkey, dist, seed)
+    * projection of the last, cache-tracked state. */
   private def bfsLoop(adj: DataFrame, iters: Int,
       mergeHint: Boolean = false): DataFrame = {
     import adj.sparkSession.implicits._
@@ -539,11 +472,8 @@ object Graph {
     val seeds = adj.select($"node").distinct()
       .filter($"node" % 10 === 0)
       .select($"node", lit(0L).as("dist"), $"node".as("seed"))
-    var round = materializeRound(seeds, count(lit(1)))
-    var i = 1
-    var converged = false
-    while (i <= iters && !converged) {
-      val state = round.state.select($"node", $"dist", $"seed")
+    Superstep.iterate(seeds, count(lit(1)), iters) { (st, _) =>
+      val state = st.select($"node", $"dist", $"seed")
       // the node's own prior state rides the union with a marker, so
       // ONE argmin aggregate yields both the relaxed state and the
       // fixpoint delta (old = min over own rows — at most one per
@@ -564,15 +494,8 @@ object Graph {
       // function of the state table (the lexicographic min can only
       // move down), so an unchanged round implies all remaining
       // rounds are identical; the oracle still unrolls all rounds
-      val nextRound = materializeRound(next,
-        sum(when($"moved", 1L).otherwise(0L)))
-      converged = nextRound.n == 0
-      round.cache.unpersist(blocking = false)
-      round = nextRound
-      i += 1
-    }
-    graft.CacheRegistry.track(round.cache)
-    round.state.select($"node".as("s_suppkey"), $"dist", $"seed")
+      (next, sum(when($"moved", 1L).otherwise(0L)))
+    }.state.select($"node".as("s_suppkey"), $"dist", $"seed")
       .orderBy($"s_suppkey")
   }
 
@@ -648,10 +571,7 @@ object Graph {
           $"total_degree",
           expr("4 * m * coalesce(intra_edges, 0L) - total_degree * total_degree")
             .as("q_num"))
-      val rows = out.persist(StorageLevel.MEMORY_AND_DISK)
-      rows.count()
-      graft.CacheRegistry.track(rows)
-      rebind(rows).orderBy($"community")
+      Superstep.output(out).orderBy($"community")
     } finally {
       adj.unpersist(blocking = false)
       e0.unpersist(blocking = false)
@@ -684,7 +604,7 @@ object Graph {
     * probe the adjacency through one map-side broadcast join (the
     * removed set is round-sized, not graph-sized), alive neighbors
     * decrement, and those falling below k are flagged r + 1. Each
-    * round is ONE materializing action ([[materializeRound]]): the
+    * round is ONE materializing action ([[Superstep.iterate]]): the
     * state is persisted and filled by a noop write that also observes
     * the count flagged for the next round, and the state comes back
     * rebound with its hash(node) layout, so the next round's
@@ -750,20 +670,12 @@ object Graph {
   private def kcorePeel(adj: DataFrame, deg0: DataFrame,
       k: Int, iters: Int): DataFrame = {
     import adj.sparkSession.implicits._
-    var round = materializeRound(kcoreInit(deg0, k), kcoreFlagged(1))
-    var r = 1
     // state r-1 flags the nodes round r removes; round `iters` is the
     // last that may remove anything, so state iters - 1 is the last
     // one needed (nodes a round iters + 1 would remove stay 0)
-    while (r < iters && round.n > 0) {
-      val nextRound = materializeRound(kcoreStep(adj, round.state, k, r),
-        kcoreFlagged(r + 1))
-      round.cache.unpersist(blocking = false)
-      round = nextRound
-      r += 1
-    }
-    graft.CacheRegistry.track(round.cache)
-    round.state.select($"node".as("p_partkey"), $"peel_round")
+    Superstep.iterate(kcoreInit(deg0, k), kcoreFlagged(1), iters - 1) { (state, r) =>
+      (kcoreStep(adj, state, k, r), kcoreFlagged(r + 1))
+    }.state.select($"node".as("p_partkey"), $"peel_round")
       .orderBy($"p_partkey")
   }
 
@@ -862,11 +774,8 @@ object Graph {
       // both consumers Exchange-free off the cache.
       adj.count()
       val deg = adj.groupBy($"node").agg(count(lit(1)).as("deg"))
-      val rows = jaccardScore(adj, e0, deg, topN, edgeHint = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      rows.count()
-      graft.CacheRegistry.track(rows)
-      rebind(rows).orderBy($"jaccard_ppm".desc, $"common".desc, $"u", $"v")
+      Superstep.output(jaccardScore(adj, e0, deg, topN, edgeHint = true))
+        .orderBy($"jaccard_ppm".desc, $"common".desc, $"u", $"v")
     } finally {
       adj.unpersist(blocking = false)
       e0.unpersist(blocking = false)
@@ -1239,46 +1148,23 @@ object Graph {
     val idx = s.table(tbl)
     val srcs = idx.select($"src").distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = idx.select($"src".as("node"))
-      .union(idx.select($"dst".as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = nodes.count()
-      // r19: loop-invariant dangling flag on the state (see
-      // graph_pagerank) — the per-round anti-join against the srcs
-      // table becomes a filter + 1-row aggregate.
-      var round = materializeRound(
-        nodes.withColumn("rank", lit(1000000000L))
-          .join(srcs.select($"src".as("node"), lit(true).as("has_out")),
-            Seq("node"), "left")
-          .select($"node", $"rank", coalesce($"has_out", lit(false)).as("has_out")),
-        count(lit(1)))
-      // same r17 superstep fold + integer fixpoint early-exit as the
-      // in-flight form (see graph_pagerank): the previous rank rides
-      // the round on the state-side join input, exact by determinism,
-      // pinned by the unchanged unrolled oracle
-      var r = 1
-      var converged = false
-      while (r <= iters && !converged) {
-        val ranks = round.state
-        val inflow = idx.hint("merge")
-          .join(ranks, idx("src") === ranks("node"))
-          .select($"dst", expr("rank * w div out_w").as("contrib"))
-          .groupBy($"dst").agg(sum($"contrib").as("inflow"))
-        val nextRound = materializeRound(rankRound(ranks, inflow, n),
-          sum(when($"rank" =!= $"old", lit(1L)).otherwise(lit(0L))))
-        converged = nextRound.n == 0
-        round.cache.unpersist(blocking = false)
-        round = nextRound
-        r += 1
-      }
-      graft.CacheRegistry.track(round.cache)
-      round.state.select($"node".as("page"), $"rank")
-        .orderBy($"rank".desc, $"page")
-    } finally {
+    val nodes = pageNodes(idx).persist(StorageLevel.MEMORY_AND_DISK)
+    try pagerankLoop(nodes, srcs.select($"src".as("node")), iters)(indexInflow(idx))
+    finally {
       srcs.unpersist(blocking = false)
       nodes.unpersist(blocking = false)
     }
+  }
+
+  /** One round's inflow over a persisted edge index: ranks join the
+    * src-bucketed edge rows (merge-hinted, see [[graph_pagerank_index]])
+    * and the out-weight divisor rides the index row. */
+  private def indexInflow(idx: DataFrame)(ranks: DataFrame): DataFrame = {
+    import idx.sparkSession.implicits._
+    idx.hint("merge")
+      .join(ranks, idx("src") === ranks("node"))
+      .select($"dst", expr("rank * w div out_w").as("contrib"))
+      .groupBy($"dst").agg(sum($"contrib").as("inflow"))
   }
 
   /** One rank-propagation round over the persisted edge index, as a
@@ -1297,15 +1183,11 @@ object Graph {
   private[graft] def pagerankMergeIndexRoundPlan(s: SparkSession, d: String): DataFrame =
     pagerankRoundPlanOver(s, pagerankMergeIndexTable(s, d))
 
+  /** The loop's first inflow over the loop's own round-0 state. */
   private def pagerankRoundPlanOver(s: SparkSession, tbl: String): DataFrame = {
-    import s.implicits._
     val idx = s.table(tbl)
-    val ranks = idx.select($"src".as("node")).distinct()
-      .withColumn("rank", lit(1000000000L))
-    idx.hint("merge")
-      .join(ranks, idx("src") === ranks("node"))
-      .select($"dst", expr("rank * w div out_w").as("contrib"))
-      .groupBy($"dst").agg(sum($"contrib").as("inflow"))
+    indexInflow(idx)(pagerankInit(pageNodes(idx),
+      idx.select(col("src").as("node")).distinct()))
   }
 
   private val adjIndexBuilt = new java.util.HashSet[String]()
@@ -1339,30 +1221,16 @@ object Graph {
     * no sort on the edges, only the node-sized label state shuffles
     * per round. The merge hint pins SMJ for the same
     * too-big-to-broadcast reason as [[graph_pagerank_index]]. */
-  def graph_lpa_index(s: SparkSession, d: String, iters: Int = 6): DataFrame = {
-    import s.implicits._
-    val adj = s.table(adjIndexTable(s, d))
-    val labels = lpaLoop(adj, iters, mergeHint = true)
-    val out = labels
-      .withColumn("community_size",
-        count(lit(1)).over(Window.partitionBy($"label")))
-      .select($"node".as("s_suppkey"), $"label".as("community"),
-        $"community_size")
-    val rows = out.persist(StorageLevel.MEMORY_AND_DISK)
-    rows.count()
-    graft.CacheRegistry.track(rows)
-    rebind(rows).orderBy($"s_suppkey")
-  }
+  def graph_lpa_index(s: SparkSession, d: String, iters: Int = 6): DataFrame =
+    communities(lpaLoop(s.table(adjIndexTable(s, d)), iters, mergeHint = true))
 
   /** One LPA vote round over the persisted adjacency index — the
-    * spec's zero-Exchange plan-gate handle (same rationale as
+    * loop's own votes over its own round-0 labels; the spec's
+    * zero-Exchange plan-gate handle (same rationale as
     * [[pagerankIndexRoundPlan]]). */
   private[graft] def lpaIndexRoundPlan(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val adj = s.table(adjIndexTable(s, d)).hint("merge")
-    val labels = adj.select($"node").distinct().withColumn("label", $"node")
-    adj.join(labels.select($"node".as("nbr"), $"label"), "nbr")
-      .groupBy($"node", $"label").agg(count(lit(1)).as("cnt"))
+    val adj = s.table(adjIndexTable(s, d))
+    lpaVotes(adj.hint("merge"), lpaInit(adj))
   }
 
   private val triIndexBuilt = new java.util.HashSet[String]()
@@ -1580,145 +1448,6 @@ object Graph {
     val (adjTbl, edgeTbl, degTbl) = partIndexTables(s, d)
     jaccardScore(s.table(adjTbl), s.table(edgeTbl),
       s.table(degTbl).select($"node", $"deg"), topN, edgeHint = true)
-  }
-
-  // ───────────────────────────────────────────────────────────────────
-  // r19 in-flight plan handles (plans/r19 + OPTIMIZATION_r19.md): the
-  // in-flight loop queries materialize per round, so their final
-  // explain shows only a LogicalRDD scan; these expose ONE
-  // representative superstep round over the SAME cached layout the
-  // query builds — the unit the r19 partitioning changes act on. Each
-  // handle persists via CacheRegistry.cache; callers releaseAll after
-  // explaining. (Index-form precedent: pagerankIndexRoundPlan /
-  // lpaIndexRoundPlan / trianglesIndexPlan.)
-  // ───────────────────────────────────────────────────────────────────
-
-  /** One LPA vote round over the in-flight adjacency cache (the
-    * nbr-keyed, sorted layout [[graph_label_prop]] /
-    * [[graph_modularity]] persist). The label state goes through the
-    * same LogicalRDD rebind as the real loop — the rebind is what
-    * erases its stats, so the round plans SMJ (state side shuffled,
-    * adjacency side Exchange-free), exactly like round 2..k. */
-  private[graft] def lpaInflightRoundPlan(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val e0 = coSupplierEdges(s, d)
-    val adj = graft.CacheRegistry.cache(
-      e0.select($"u".as("node"), $"v".as("nbr"))
-        .union(e0.select($"v".as("node"), $"u".as("nbr")))
-        .repartition($"nbr").sortWithinPartitions($"nbr"))
-    adj.count() // r20: plan handles materialize like the real loop does
-    val labelCache = graft.CacheRegistry.cache(
-      adj.select($"node").distinct().withColumn("label", $"node"))
-    labelCache.count()
-    val labels = rebind(labelCache)
-    adj.join(labels.select($"node".as("nbr"), $"label"), "nbr")
-      .groupBy($"node", $"label").agg(count(lit(1)).as("cnt"))
-  }
-
-  /** One BFS relaxation round over the in-flight adjacency cache (the
-    * nbr-keyed, sorted layout [[graph_bfs_layers]] persists). */
-  private[graft] def bfsInflightRoundPlan(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val e0 = coSupplierEdges(s, d)
-    val adj = graft.CacheRegistry.cache(
-      e0.select($"u".as("node"), $"v".as("nbr"))
-        .union(e0.select($"v".as("node"), $"u".as("nbr")))
-        .repartition($"nbr").sortWithinPartitions($"nbr"))
-    adj.count() // r20: plan handles materialize like the real loop does
-    val stateCache = graft.CacheRegistry.cache(
-      adj.select($"node").distinct()
-        .filter($"node" % 10 === 0)
-        .select($"node", lit(0L).as("dist"), $"node".as("seed")))
-    stateCache.count()
-    val state = rebind(stateCache)
-    adj.join(state.select($"node".as("nbr"), ($"dist" + 1L).as("dist"),
-        $"seed"), "nbr")
-      .select($"node", $"dist", $"seed", lit(false).as("own"))
-      .union(state.withColumn("own", lit(true)))
-      .groupBy($"node")
-      .agg(min(struct($"dist", $"seed")).as("m"),
-        min(when($"own", struct($"dist", $"seed"))).as("old"))
-  }
-
-  /** One pagerank inflow round over the in-flight edge cache (the
-    * src-keyed, sorted layout [[graph_pagerank]] persists, out-weights
-    * co-partitioned). */
-  private[graft] def pagerankInflightRoundPlan(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val edges = graft.CacheRegistry.cache(
-      pageEdges(s, d).repartition($"src").sortWithinPartitions($"src"))
-    edges.count()
-    val outW = graft.CacheRegistry.cache(
-      edges.groupBy($"src").agg(sum($"w").as("out_w"))
-        .sortWithinPartitions($"src"))
-    outW.count()
-    // r20 (r19 advice): the dumped round previously faked its state —
-    // src-only nodes with has_out=lit(true) (a constant-folded,
-    // trivially-empty dangling branch) and a hardcoded n=1000 teleport
-    // denominator. Build it exactly like graph_pagerank's init (full
-    // node set, has_out via the outW left join, n from nodes.count())
-    // so the captured plan IS the production round shape.
-    val nodes = edges.select($"src".as("node"))
-      .union(edges.select($"dst".as("node"))).distinct()
-    val n = nodes.count()
-    val rankCache = graft.CacheRegistry.cache(
-      nodes.withColumn("rank", lit(1000000000L))
-        .join(outW.select($"src".as("node"), lit(true).as("has_out")),
-          Seq("node"), "left")
-        .select($"node", $"rank", coalesce($"has_out", lit(false)).as("has_out")))
-    rankCache.count()
-    val ranks = rebind(rankCache)
-    val inflow = edges.join(ranks, edges("src") === ranks("node"))
-      .join(outW, Seq("src"))
-      .select($"dst", expr("rank * w div out_w").as("contrib"))
-      .groupBy($"dst").agg(sum($"contrib").as("inflow"))
-    // full round incl. the r19 dangling term: a filter + 1-row
-    // aggregate over the flagged state (was a ranks-vs-srcs anti-join)
-    val dangling = ranks.filter(!$"has_out")
-      .agg(coalesce(sum($"rank"), lit(0L)).as("dang"))
-    val old = ranks.select($"node", $"rank".as("old"), $"has_out")
-    old.join(inflow, old("node") === inflow("dst"), "left")
-      .crossJoin(broadcast(dangling))
-      .select(old("node"),
-        (lit(150000000L) +
-          expr(s"85 * (coalesce(inflow, 0L) + dang div ${n}L) div 100")
-        ).as("rank"))
-  }
-
-  /** One k-core decrement round over the in-flight adjacency cache
-    * (the node-keyed layout [[graph_kcore]] persists), built by the
-    * loop's own [[kcoreInit]], [[materializeRound]] and [[kcoreStep]]:
-    * the broadcast removal probe preserves partitioning, so the
-    * decrement aggregate and the state join are both Exchange-free. */
-  private[graft] def kcoreInflightRoundPlan(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val e0 = partEdges(s, d)
-    val adj = graft.CacheRegistry.cache(
-      e0.select($"u".as("node"), $"v".as("nbr"))
-        .union(e0.select($"v".as("node"), $"u".as("nbr")))
-        .repartition($"node"))
-    adj.count() // r20: plan handles materialize like the real loop does
-    val round = materializeRound(
-      kcoreInit(adj.groupBy($"node").agg(count(lit(1)).as("deg")), 65),
-      kcoreFlagged(1))
-    graft.CacheRegistry.track(round.cache)
-    kcoreStep(adj, round.state, 65, 1)
-  }
-
-  /** The full in-flight jaccard composition over the cached layouts
-    * [[graph_jaccard_links]] builds (node-keyed sorted adjacency,
-    * SHJ-pinned edge anti-join), pre-materialization. */
-  private[graft] def jaccardInflightPlan(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val e0 = graft.CacheRegistry.cache(partEdges(s, d))
-    e0.count() // r20: plan handles materialize like the real query does
-    val adj = graft.CacheRegistry.cache(
-      e0.select($"u".as("node"), $"v".as("nbr"))
-        .union(e0.select($"v".as("node"), $"u".as("nbr")))
-        .repartition($"node").sortWithinPartitions($"node", $"nbr"))
-    adj.count()
-    jaccardScore(adj, e0, adj.groupBy($"node").agg(count(lit(1)).as("deg")),
-      100, edgeHint = true)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

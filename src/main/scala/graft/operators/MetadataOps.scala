@@ -312,69 +312,44 @@ object MetadataOps {
     * in its 2^k-step ancestor — O(log depth) shuffles TOTAL for the
     * whole namespace, the same doubling argument as
     * [[graft.operators.Dedup.connectedComponents]]'s jump step (and
-    * the same loop hygiene: per-round persist, LogicalRDD rebinding
-    * against plan-tree doubling, convergence count riding the
-    * materializing action, loud failure on iteration exhaustion —
-    * MetadataSpec gates a 3000-deep chain resolving in ≤ 13 rounds).
+    * the same [[Superstep.iterate]] driver: one materializing action
+    * per round that also counts the unresolved nodes, LogicalRDD
+    * rebinding against plan-tree doubling, loud failure on iteration
+    * exhaustion — MetadataSpec gates a 3000-deep chain resolving in
+    * ≤ 13 rounds).
     *
     * Input: (id, parent_id, name) — parent_id NULL only at root.
     * Output: (id, path, depth); the invariant each round preserves is
     * full_path(id) = full_path(anc) ++ path, so when anc drains to
     * NULL, `path` IS the full path ('' for root). */
   def resolvePaths(inodes: DataFrame, maxIter: Int = 40): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val s = inodes.sparkSession
-    val inFlight = scala.collection.mutable.Set[DataFrame]()
-    def persistRound(df: DataFrame): DataFrame = {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK); inFlight += p; p
+    // the convergence count: nodes still carrying an ancestor pointer
+    val pending = sum(when(col("anc").isNotNull, 1L).otherwise(0L))
+    val init = inodes.select(col("id"),
+      col("parent_id").as("anc"),
+      when(col("parent_id").isNull, lit(""))
+        .otherwise(concat(lit("/"), col("name"))).as("path"),
+      when(col("parent_id").isNull, lit(0L)).otherwise(lit(1L))
+        .as("depth"))
+    val last = Superstep.iterate(init, pending, maxIter) { (state, _) =>
+      val lut = state.select(col("id").as("tid"), col("anc").as("tanc"),
+        col("path").as("tpath"), col("depth").as("tdepth"))
+      val upd = state.join(lut, state("anc") === col("tid"), "left")
+        .select(state("id"), col("tanc").as("anc"),
+          when(col("tid").isNull, state("path"))
+            .otherwise(concat(col("tpath"), state("path"))).as("path"),
+          when(col("tid").isNull, state("depth"))
+            .otherwise(col("tdepth") + state("depth")).as("depth"))
+      (upd, pending)
     }
-    def dropRound(df: DataFrame): Unit = {
-      df.unpersist(blocking = false); inFlight -= df
+    if (last.n > 0) {
+      last.cache.unpersist(blocking = false)
+      throw new IllegalStateException(
+        s"resolvePaths did not converge in $maxIter rounds (${last.n} " +
+          "nodes unresolved) — with doubling this covers depth 2^40; " +
+          "the parent graph has a cycle or a dangling parent_id")
     }
-    var ok = false
-    try {
-      var state = persistRound(inodes.select(col("id"),
-        col("parent_id").as("anc"),
-        when(col("parent_id").isNull, lit(""))
-          .otherwise(concat(lit("/"), col("name"))).as("path"),
-        when(col("parent_id").isNull, lit(0L)).otherwise(lit(1L))
-          .as("depth")))
-      var pending = state.filter(col("anc").isNotNull).count()
-      var prevCached: Option[DataFrame] = Some(state)
-      var i = 0
-      while (pending > 0 && i < maxIter) {
-        val lut = state.select(col("id").as("tid"), col("anc").as("tanc"),
-          col("path").as("tpath"), col("depth").as("tdepth"))
-        val upd = state.join(lut, state("anc") === col("tid"), "left")
-          .select(state("id"), col("tanc").as("anc"),
-            when(col("tid").isNull, state("path"))
-              .otherwise(concat(col("tpath"), state("path"))).as("path"),
-            when(col("tid").isNull, state("depth"))
-              .otherwise(col("tdepth") + state("depth")).as("depth"))
-        val cached = persistRound(upd)
-        // one job materializes the round AND returns the convergence
-        // count (nodes still carrying a non-null ancestor pointer)
-        pending = cached.filter(col("anc").isNotNull).count()
-        // r20: partitioning-preserving rebind (see Graph.rebind) — the
-        // cached round is materialized by the pending count above
-        state = org.apache.spark.sql.graft.Rebind.preserving(cached)
-        prevCached.foreach(dropRound)
-        prevCached = Some(cached)
-        i += 1
-      }
-      if (pending > 0)
-        throw new IllegalStateException(
-          s"resolvePaths did not converge in $maxIter rounds ($pending " +
-            "nodes unresolved) — with doubling this covers depth 2^40; " +
-            "the parent graph has a cycle or a dangling parent_id")
-      prevCached.foreach(graft.CacheRegistry.track)
-      ok = true
-      state.select(col("id"), col("path"), col("depth"))
-    } finally {
-      if (!ok) inFlight.foreach { df =>
-        try df.unpersist(blocking = false) catch { case _: Throwable => () }
-      }
-    }
+    last.state.select(col("id"), col("path"), col("depth"))
   }
 
   /** Full-namespace path listing — [[resolvePaths]] over the
@@ -388,7 +363,10 @@ object MetadataOps {
     * hash-verifies, the dedup_clusters playbook. */
   def fs_path_resolve(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val inodes = inodeTable(s, d)
+    // read twice, by the loop's init and by the attribute join back:
+    // persisted once, so the join does not derive the inode table (its
+    // global dense-rank window and directory joins) a second time
+    val inodes = graft.CacheRegistry.cache(inodeTable(s, d))
     resolvePaths(inodes)
       .join(inodes.select($"id", $"is_dir", $"size_bytes"), "id")
       .select($"id".as("inode_id"),

@@ -1450,14 +1450,10 @@ object Similarity {
             Window.partitionBy($"nid").orderBy($"cos_ppm".desc, $"nbr")))
           .filter($"rank" <= k)
           .select($"nid", $"rank", $"nbr", $"cos_ppm")
-        val rows = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        rows.count()
-        graft.CacheRegistry.track(rows)
-        rows.sparkSession.createDataFrame(rows.rdd, rows.schema)
-          .orderBy($"nid", $"rank")
+        Superstep.output(out).orderBy($"nid", $"rank")
       } finally
-        // r20 (r19 advice): scoredHalf is only needed until rows.count()
-        // materializes the output — release it here instead of holding
+        // r20 (r19 advice): scoredHalf is only needed until the output
+        // is materialized — release it here instead of holding
         // MEMORY_AND_DISK until the harness's next releaseAll (the
         // registry's duplicate unpersist at release is a no-op)
         scoredHalf.unpersist(blocking = false)
@@ -1542,11 +1538,7 @@ object Similarity {
         Window.partitionBy($"nid").orderBy($"cos_ppm".desc, $"nbr")))
       .filter($"rank" <= 5)
       .select($"nid", $"rank", $"nbr", $"cos_ppm")
-    val rows = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rows.count()
-    graft.CacheRegistry.track(rows)
-    rows.sparkSession.createDataFrame(rows.rdd, rows.schema)
-      .orderBy($"nid", $"rank")
+    Superstep.output(out).orderBy($"nid", $"rank")
   }
 
   /** LSH BANDING CAPACITY PLANNER — the report an operator runs
@@ -1585,11 +1577,7 @@ object Similarity {
           .select(lit(r.toLong).as("r"), lit(bands.toLong).as("bands"),
             $"n_buckets", $"max_bucket", $"cand_pairs")
       }
-      val out = reports.reduce(_.unionByName(_))
-      val rows = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rows.count()
-      graft.CacheRegistry.track(rows)
-      rows.sparkSession.createDataFrame(rows.rdd, rows.schema).orderBy($"r")
+      Superstep.output(reports.reduce(_.unionByName(_))).orderBy($"r")
     } finally e.unpersist(blocking = false)
   }
 

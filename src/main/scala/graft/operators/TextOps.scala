@@ -460,24 +460,30 @@ object TextOps {
         .filter(length($"w") >= 2)
         .groupBy($"w").agg(count(lit(1)).as("freq"))
         .select(split($"w", "").as("toks"), $"freq"))
+    // the round cache `cur` was built from; released once `cur` is filled
+    var prev: Option[DataFrame] = None
     val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var r = 1
     var exhausted = false
     while (r <= rounds && !exhausted) {
+      // the top-pair collect reads the persisted frame itself, so it
+      // fills the cache: the rebind below then claims a loaded cache's
+      // layout, and the predecessor is no longer needed
       val top = cur
         .select($"freq", explode(adjacentTokenPairs($"toks")).as("p"))
         .groupBy($"p.l".as("l"), $"p.r".as("r")).agg(sum($"freq").as("n"))
         .orderBy($"n".desc, $"l", $"r")
         .limit(1).collect()
+      prev.foreach(_.unpersist(blocking = false))
       if (top.isEmpty) exhausted = true
       else {
         val (a, b, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         out += ((r, a, b, n))
-        val next = graft.CacheRegistry.cache(
-          cur.select(applyBpeMerge($"toks", a, b).as("toks"), $"freq")
+        prev = Some(cur)
+        cur = graft.CacheRegistry.cache(
+          org.apache.spark.sql.graft.Rebind.preserving(cur)
+            .select(applyBpeMerge($"toks", a, b).as("toks"), $"freq")
             .filter(size($"toks") >= 2))
-        // r20: InternalRow rebind (no Row round-trip; see Graph.rebind)
-        cur = org.apache.spark.sql.graft.Rebind.preserving(next)
         r += 1
       }
     }

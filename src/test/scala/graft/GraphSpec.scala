@@ -8,11 +8,16 @@ import graft.operators.Graph
   * design means there is no tolerance to hide behind. */
 class GraphSpec extends SparkSpec {
 
-  /** Spark jobs of one warm graph_kcore at sf0.001, build and collect:
-    * the edge and degree build, four peel states (each its own shuffle
-    * stages, its cache stage and its noop write) and the sorted
-    * readout of the last state. */
-  private val KcoreJobs = 19
+  /** Spark jobs of one warm query at sf0.001, build and collect. For
+    * graph_kcore: the edge and degree build, four peel states (each its
+    * own shuffle stages, its cache stage and its noop write) and the
+    * sorted readout of the last state. */
+  private val PinnedJobs = Seq(
+    "graph_kcore" -> 19,
+    "graph_label_prop" -> 29,
+    "graph_triangles" -> 18,
+    "fs_path_resolve" -> 24,
+    "dedup_clusters" -> 42)
 
   /** (src, dst, w) edge list the pagerank operator derives, rebuilt
     * driver-side from raw events. */
@@ -192,21 +197,24 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("a warm graph_kcore runs a pinned number of Spark jobs") {
-    // one materializing job per peel round: a change that adds a job
-    // back to every round (or to the output) moves this count
-    val sc = spark.sparkContext
-    Graph.graph_kcore(spark, sf0001).collect()
-    CacheRegistry.releaseAll()
-    val group = "graph-kcore-job-gate"
-    sc.setJobGroup(group, "one warm graph_kcore")
-    try Graph.graph_kcore(spark, sf0001).collect()
-    finally sc.clearJobGroup()
-    CacheRegistry.releaseAll()
-    org.apache.spark.ListenerBusDrain(sc)
-    val jobs = sc.statusTracker.getJobIdsForGroup(group).length
-    assert(jobs == KcoreJobs, s"a warm graph_kcore ran $jobs Spark jobs, pinned at $KcoreJobs")
-  }
+  for ((query, pinned) <- PinnedJobs)
+    test(s"a warm $query runs a pinned number of Spark jobs") {
+      // one materializing job per superstep round or output: a change
+      // that adds a job back to every round (or to the output) moves
+      // this count
+      val sc = spark.sparkContext
+      val run = SparkEntry.queries(query)
+      run(spark, sf0001).collect()
+      CacheRegistry.releaseAll()
+      val group = s"$query-job-gate"
+      sc.setJobGroup(group, s"one warm $query")
+      try run(spark, sf0001).collect()
+      finally sc.clearJobGroup()
+      CacheRegistry.releaseAll()
+      org.apache.spark.ListenerBusDrain(sc)
+      val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+      assert(jobs == pinned, s"a warm $query ran $jobs Spark jobs, pinned at $pinned")
+    }
 
   test("graph_jaccard_links equals brute-force common-neighbor Jaccard on non-edges") {
     val edges = partEdges()
@@ -637,9 +645,9 @@ class GraphSpec extends SparkSpec {
       .isInstanceOf[UnknownPartitioning])
     finally unfilled.unpersist(blocking = true)
 
-    // the superstep round helper hands back a rebound state that keeps
-    // the round's hash(node) layout, and the next k-core round over it
-    // (decrement aggregate + state join) runs with no shuffle
+    // the superstep driver's round hands back a rebound state that
+    // keeps the round's hash(node) layout, and the next k-core round
+    // over it (decrement aggregate + state join) runs with no shuffle
     val e0 = Graph.partEdges(spark, sf0001)
     val adj = e0.select($"u".as("node"), $"v".as("nbr"))
       .union(e0.select($"v".as("node"), $"u".as("nbr")))
@@ -647,7 +655,7 @@ class GraphSpec extends SparkSpec {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       adj.count()
-      val round = Graph.materializeRound(
+      val round = graft.operators.Superstep.materialize(
         Graph.kcoreInit(adj.groupBy($"node").agg(count(lit(1)).as("deg")), 65),
         Graph.kcoreFlagged(1))
       try {

@@ -58,6 +58,18 @@ class MetadataSpec extends SparkSpec {
     assert(deepest._2 == (2 to 3000).map(i => s"/n$i").mkString)
   }
 
+  test("resolvePaths cut off before convergence fails loudly and leaves no cache entry") {
+    import spark.implicits._
+    val inodes = (1 to 3000).map(i =>
+        (i.toLong, if (i == 1) None else Some(i - 1L), s"n$i"))
+      .toDF("id", "parent_id", "name")
+    val before = org.apache.spark.sql.CacheEntries(spark)
+    val err = intercept[IllegalStateException](MetadataOps.resolvePaths(inodes, maxIter = 2))
+    assert(err.getMessage.contains("did not converge in 2 rounds"), err.getMessage)
+    assert(org.apache.spark.sql.CacheEntries(spark) == before,
+      "a non-converged resolvePaths left a cache entry behind")
+  }
+
   test("fs_path_resolve paths equal the direct source/lang reconstruction") {
     import spark.implicits._
     val got = MetadataOps.fs_path_resolve(spark, sf0001).collect()
